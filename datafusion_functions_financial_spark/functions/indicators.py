@@ -9,18 +9,19 @@ cannot express these recursive scans, so the idiomatic mapping is:
   ``count`` (pure Catalyst, whole-stage codegen, no Python). Exact
   whenever the value column has no NULLs (the null-skipping reference
   semantics only diverge on NULL inputs).
-- **Exact path for all four** — one ``groupBy(partition).applyInPandas``
-  pass that sorts each group by the order columns and appends every
-  requested indicator column using the pure-pandas kernels. Arrow
-  batches both directions; one shuffle total no matter how many
-  indicators are requested.
+- **Exact path for all four** — one hash shuffle on the partition
+  keys, a JVM sort within partitions, then one ``mapInPandas`` call per
+  shuffle partition (``_map_series``) that folds every series of the
+  partition at once with the row-parallel kernels and appends every
+  requested indicator column. Arrow batches both directions; one
+  shuffle total no matter how many indicators are requested.
 
 Scale notes (100 TB):
-- The only shuffle is the groupBy on the partition keys; all
+- The only shuffle is the repartition on the partition keys; all
   indicators for a series are computed in that single pass.
-- Per-group memory is O(series length). Partition keys should be
-  fine-grained (e.g. ``(ticker,)`` or ``(ticker, year)``); the driver
-  never collects.
+- Python-worker memory is O(shuffle partition). Partition keys should
+  be fine-grained (e.g. ``(ticker,)`` or ``(ticker, year)``); the
+  driver never collects.
 - Requesting a *global* series (no partition key) is a 1-task
   bottleneck by definition of the semantics; we allow it but warn.
 """
@@ -31,6 +32,7 @@ import warnings
 from dataclasses import dataclass
 from typing import Iterable, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -85,12 +87,25 @@ def macd(out_col: str = "macd", value_col: str | None = None) -> IndicatorSpec:
     return IndicatorSpec("macd", None, out_col, value_col)
 
 
-_KERNELS = {
-    "sma": lambda v, spec: sma_kernel(v, spec.window),
-    "ema": lambda v, spec: ema_kernel(v, spec.window),
-    "rsi": lambda v, spec: rsi_kernel(v, spec.window),
-    "macd": lambda v, spec: macd_kernel(v),
+_SCALAR = {
+    "sma": sma_kernel,
+    "ema": ema_kernel,
+    "rsi": rsi_kernel,
+    "macd": lambda v, _window: macd_kernel(v),
 }
+_FOLD2D = {
+    "ema": lambda M, lens, w: kernels.ema_fold2d(M, 2.0 / (float(w) + 1.0)),
+    "rsi": lambda M, lens, w: kernels.rsi_fold2d(M, lens, w),
+    "macd": lambda M, lens, w: (kernels.ema_fold2d(M, 2.0 / 13.0)
+                                - kernels.ema_fold2d(M, 2.0 / 27.0)),
+}
+# The row-parallel kernels pay one numpy step (~10-20 us) per time
+# index whatever the series count; the scalar loops pay ~0.5-1 us per
+# element. On 4 kernels over equal-length series the two cross at about
+# 20-30 series per partition (numpy 2, x86 host), so a partition whose
+# rows amount to fewer than this many longest series runs the scalar
+# loops. Both give bit-identical results.
+_ROW_PARALLEL_MIN_SERIES = 24
 
 
 def with_indicators(
@@ -99,7 +114,6 @@ def with_indicators(
     order_by: Sequence[str],
     partition_by: Sequence[str],
     specs: Iterable[IndicatorSpec],
-    method: str = "partition",
     max_rows_per_task: int | None = None,
     warn_context: str | None = None,
 ) -> DataFrame:
@@ -109,17 +123,18 @@ def with_indicators(
     tiebreaker column if the primary sort key can repeat) — otherwise
     the recursive indicators are not well-defined.
 
-    ``method``:
-
-    - ``"partition"`` (default): shuffle on the keys, sort within
-      partitions JVM-side, then ONE ``mapInPandas`` pass per shuffle
-      partition that detects group boundaries and runs the kernels on
-      numpy slices. Amortizes the Arrow/pandas round-trip over all
-      groups in a partition (thousands of tiny series per Python call
-      instead of one call per series). Memory: O(shuffle partition) in
-      the Python worker — size partitions accordingly.
-    - ``"group"``: classic ``groupBy().applyInPandas`` — one call per
-      series; memory O(series); better for few huge series.
+    Execution: shuffle on the keys, sort within partitions JVM-side,
+    then ONE ``mapInPandas`` pass per shuffle partition that finds the
+    series boundaries and runs the kernels on every series of the
+    partition at once (``_map_series``; a partition of only a few long
+    series runs them series by series). Amortizes the Arrow/pandas
+    round-trip over all groups in a partition (thousands of tiny
+    series per Python call instead of one call per series). Memory:
+    O(shuffle partition) in the Python worker — size partitions
+    accordingly. NULL partition keys form one series, as in
+    ``groupBy``. Without ``partition_by`` the whole frame is one series
+    on one task, sorted in the JVM like a keyed one (NULL order values
+    first).
 
     ``max_rows_per_task``: hot-key series splitting. Any series longer
     than this routes through the segmented bucketed-carry path
@@ -148,15 +163,9 @@ def with_indicators(
         raise ValueError("order_by is required: indicator semantics are "
                          "order-dependent (SURVEY.md §7 hard part 2)")
 
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField(s.out_col, DoubleType(), True) for s in specs]
-    )
-
     if max_rows_per_task is not None:
         return _split_hot_series(
-            df, value_col, order_by, partition_by, specs, method,
-            max_rows_per_task,
+            df, value_col, order_by, partition_by, specs, max_rows_per_task,
         )
 
     if not partition_by:
@@ -168,103 +177,92 @@ def with_indicators(
             stacklevel=2,
         )
 
-    if method == "group" or not partition_by:
-        def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_by, kind="mergesort",
-                                  ignore_index=True)
-            for s in specs:
-                pdf[s.out_col] = _KERNELS[s.kind](
-                    pdf[s.value_col or value_col], s
-                )
-            return pdf
+    def fold(pdf, starts, ends):
+        # Per value column: pack the non-null runs once into a
+        # (G, maxlen) NaN-padded matrix, so the recursive kernels run
+        # PARALLEL ACROSS SERIES (one vectorized step per time index —
+        # see kernels.*_fold2d) instead of a Python loop per series;
+        # expression trees per element are unchanged, so results stay
+        # bit-identical. A partition of few long series (a keyless
+        # call, a hot key) runs the scalar kernels per series instead.
+        columns = {}
+        outs = {}
+        for s in specs:
+            col = s.value_col or value_col
+            if col not in columns:
+                arr = pdf[col].to_numpy(dtype="float64", na_value=np.nan)
+                nn = ~np.isnan(arr)
+                cum = np.concatenate(([0], np.cumsum(nn)))
+                lens = cum[ends] - cum[starts]
+                packed = None
+                if lens.sum() >= _ROW_PARALLEL_MIN_SERIES * lens.max():
+                    pos = np.flatnonzero(nn)
+                    packed = (pos, lens,
+                              kernels.pack_series(arr[pos], lens))
+                columns[col] = (arr, packed)
+            arr, packed = columns[col]
+            out = np.full(len(pdf), np.nan)
+            if s.kind == "sma" or packed is None:
+                # scalar kernels per series (sma_kernel is vectorized
+                # within one)
+                for st, en in zip(starts, ends):
+                    out[st:en] = _SCALAR[s.kind](arr[st:en], s.window)
+            else:
+                pos, lens, M = packed
+                R = _FOLD2D[s.kind](M, lens, s.window)
+                out[pos] = kernels.unpack_series(R, lens)
+            outs[s.out_col] = out
+        return outs
 
-        if partition_by:
-            return df.groupBy(*partition_by).applyInPandas(compute,
-                                                           out_schema)
-        return (
-            df.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(lambda pdf: compute(pdf.drop(columns="__g")),
-                           out_schema)
-        )
-    if method != "partition":
-        raise ValueError("method must be 'partition' or 'group'")
+    return _map_series(df, partition_by, order_by,
+                       [s.out_col for s in specs], fold)
 
-    import numpy as np
 
-    def compute_partition(batches):
+def _map_series(df: DataFrame, keys: Sequence[str], order: Sequence[str],
+                new_cols: Sequence[str], fold) -> DataFrame:
+    """The one partition-packed series runner behind every recursive
+    per-series indicator: shuffle on ``keys`` (one partition when there
+    are none), sort within partitions by (keys, order) in the JVM, then
+    one ``mapInPandas`` call per shuffle partition. Each call finds the
+    series bounds — row ``starts[g]`` up to ``ends[g]`` — and appends
+    the float64 columns of ``fold(pdf, starts, ends) -> {col: array}``.
+    This is the one place that knows the series-boundary rule."""
+    keys, order = list(keys), list(order)
+    schema = StructType(
+        df.schema.fields + [StructField(c, DoubleType(), True)
+                            for c in new_cols]
+    )
+
+    def compute(batches):
         pdfs = list(batches)
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         if len(pdf) == 0:
             return
-        # Rows arrive sorted by (keys..., order...); find group bounds.
-        # Null-safe compare: pandas NaN != NaN is True, so a plain
-        # keys.ne(shift) would start a new group on EVERY null-keyed row,
-        # silently resetting indicators (groupBy treats nulls as one
-        # group — this path must agree with method='group').
-        keys = pdf[partition_by]
-        shifted = keys.shift()
+        # Rows arrive sorted by (keys..., order...). Null-safe compare:
+        # pandas NaN != NaN is True, so a plain keys.ne(shift) would
+        # start a new series on EVERY null-keyed row, silently resetting
+        # the folds (groupBy treats nulls as one group). With no keys
+        # the partition is one series.
+        kdf = pdf[keys]
+        shifted = kdf.shift()
         changed = (
-            (keys.ne(shifted) & ~(keys.isna() & shifted.isna()))
+            (kdf.ne(shifted) & ~(kdf.isna() & shifted.isna()))
             .any(axis=1)
             .to_numpy()
         )
         changed[0] = True
         starts = np.flatnonzero(changed)
         ends = np.append(starts[1:], len(pdf))
-        value_arrays = {
-            c: pdf[c].to_numpy(dtype="float64", na_value=np.nan)
-            for c in {s.value_col or value_col for s in specs}
-        }
-        outs = {s.out_col: np.full(len(pdf), np.nan) for s in specs}
-        # Pack each value column's non-null runs once: (G, maxlen)
-        # NaN-padded matrix + global row positions per series. The
-        # recursive kernels then run PARALLEL ACROSS SERIES (one
-        # vectorized step per time index — see kernels.*_fold2d)
-        # instead of a Python loop per series; expression trees per
-        # element are unchanged, so results stay bit-identical.
-        packed = {}
-        for c, arr in value_arrays.items():
-            nn = ~np.isnan(arr)
-            idx_segs = [
-                st + np.flatnonzero(nn[st:en])
-                for st, en in zip(starts, ends)
-            ]
-            M, lens = kernels.pack_segments([arr[ix] for ix in idx_segs])
-            packed[c] = (M, lens, idx_segs)
-
-        def scatter(out_arr, R, idx_segs):
-            for g, ix in enumerate(idx_segs):
-                out_arr[ix] = R[g, : ix.shape[0]]
-
-        for s in specs:
-            M, lens, idx_segs = packed[s.value_col or value_col]
-            if s.kind == "ema":
-                R = kernels.ema_fold2d(M, 2.0 / (float(s.window) + 1.0))
-            elif s.kind == "macd":
-                R = (kernels.ema_fold2d(M, 2.0 / 13.0)
-                     - kernels.ema_fold2d(M, 2.0 / 27.0))
-            elif s.kind == "rsi":
-                R = kernels.rsi_fold2d(M, lens, s.window)
-            else:  # sma: per-segment sliding windows, already vector
-                arr = value_arrays[s.value_col or value_col]
-                for st, en in zip(starts, ends):
-                    outs[s.out_col][st:en] = _KERNELS[s.kind](
-                        arr[st:en], s
-                    )
-                continue
-            scatter(outs[s.out_col], R, idx_segs)
-        for name, arr in outs.items():
-            pdf[name] = arr
+        outs = fold(pdf, starts, ends)
+        for c in new_cols:
+            pdf[c] = outs[c]
         yield pdf
 
-    return (
-        df.repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *order_by)
-        .mapInPandas(compute_partition, out_schema)
-    )
+    shuffled = df.repartition(*keys) if keys else df.repartition(1)
+    return (shuffled.sortWithinPartitions(*keys, *order)
+            .mapInPandas(compute, schema))
 
 
 def _split_hot_series(
@@ -273,7 +271,6 @@ def _split_hot_series(
     order_by: list[str],
     partition_by: list[str],
     specs: list[IndicatorSpec],
-    method: str,
     max_rows_per_task: int,
 ) -> DataFrame:
     """Route series longer than ``max_rows_per_task`` through the
@@ -330,7 +327,7 @@ def _split_hot_series(
         # the counts agg).
         out = with_indicators(
             df.drop("__series") if "__series" in drop_cols else df,
-            value_col, order_by, partition_by, specs, method,
+            value_col, order_by, partition_by, specs,
         )
         return out.select(*out_cols)
 
@@ -365,7 +362,7 @@ def _split_hot_series(
 
     cold_out = with_indicators(
         cold_df.drop("__series") if "__series" in drop_cols else cold_df,
-        value_col, order_by, partition_by, specs, method,
+        value_col, order_by, partition_by, specs,
     )
     return cold_out.select(*out_cols).unionByName(hot_out.select(*out_cols))
 

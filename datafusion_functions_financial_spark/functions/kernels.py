@@ -168,15 +168,33 @@ def rsi_kernel(values, window: int) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
+def _data_mask(lens: np.ndarray) -> np.ndarray:
+    """(G, maxlen) mask of the data slots of a packed matrix."""
+    maxlen = int(lens.max()) if len(lens) else 0
+    return np.arange(maxlen) < lens[:, None]
+
+
+def pack_series(values: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """NaN-padded (G, maxlen) matrix whose row g holds the next
+    ``lens[g]`` elements of ``values`` (the series laid end to end)."""
+    mask = _data_mask(lens)
+    M = np.full(mask.shape, np.nan)
+    M[mask] = values
+    return M
+
+
+def unpack_series(R: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Inverse of ``pack_series``: the first ``lens[g]`` elements of
+    each row of ``R``, laid end to end."""
+    return R[_data_mask(lens)]
+
+
 def pack_segments(segments: list) -> tuple[np.ndarray, np.ndarray]:
     """Stack compressed (non-null) per-series arrays into a NaN-padded
     (G, maxlen) matrix; returns (matrix, lengths)."""
     lens = np.array([s.shape[0] for s in segments], dtype=np.int64)
-    maxlen = int(lens.max()) if len(lens) else 0
-    M = np.full((len(segments), maxlen), np.nan)
-    for g, s in enumerate(segments):
-        M[g, : s.shape[0]] = s
-    return M, lens
+    values = np.concatenate(segments) if segments else np.empty(0)
+    return pack_series(values, lens), lens
 
 
 def ema_fold2d(M: np.ndarray, alpha: float) -> np.ndarray:

@@ -181,7 +181,7 @@ def sql_with_indicators(
     df = spark.table(table)
     seq_added = False
     # Group calls sharing (value, partition, order) into ONE
-    # applyInPandas pass each — one shuffle per distinct series, no
+    # with_indicators pass each — one shuffle per distinct series, no
     # matter how many indicators it carries.
     groups: dict[tuple, list[_Call]] = {}
     for call in calls:

@@ -5,8 +5,8 @@ Extends the reference's sma/ema/rsi/macd family
 (``/root/reference/src/functions/``) along the same path as
 ``technical.py``/``technical2.py``. Two execution shapes:
 
-- **Recursive chains (TRIX, PPO, ADX)** run in the
-  ``with_indicators(method="partition")`` shape: ONE hash shuffle on
+- **Recursive chains (TRIX, PPO, ADX)** run through
+  ``with_indicators``' series runner: ONE hash shuffle on
   the series key, JVM-side sort within partitions, then ONE
   ``mapInPandas`` call per shuffle partition that packs every series
   into a NaN-padded (G, maxlen) matrix and runs the folds
@@ -37,10 +37,11 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..plans.series import round_portable, round_portable_duck
 from ..sources.tables import load
+from . import kernels
+from .indicators import _map_series
 
 __all__ = ["trix", "ppo", "adx", "aroon"]
 
@@ -58,60 +59,17 @@ def _frame(keys: Sequence[str], order: Sequence[str], n: int):
 def _partitioned(df: DataFrame, value_col: str, keys: Sequence[str],
                  order: Sequence[str], new_cols: Sequence[str],
                  matrix_fn) -> DataFrame:
-    """Partition-mode kernel runner (see module docstring): shuffle on
-    ``keys``, sort within partitions by (keys, order), pack each
-    partition's series into a NaN-padded matrix, and call
-    ``matrix_fn(M, lens) -> {col: (G, L) matrix}`` once per partition.
-    NaN outputs map to NULL; results round portably."""
-    import numpy as np
-    import pandas as pd
-
-    from . import kernels
-
-    schema = StructType(
-        df.schema.fields
-        + [StructField(c, DoubleType()) for c in new_cols]
-    )
-    kcols = list(keys)
-    sort_cols = kcols + list(order)
-
-    def compute(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = (pd.concat(pdfs, ignore_index=True)
-               if len(pdfs) > 1 else pdfs[0])
-        if len(pdf) == 0:
-            return
-        # Null-safe group-boundary detection (same contract as
-        # indicators.with_indicators partition mode).
-        kdf = pdf[kcols]
-        shifted = kdf.shift()
-        changed = (
-            (kdf.ne(shifted) & ~(kdf.isna() & shifted.isna()))
-            .any(axis=1)
-            .to_numpy()
-        )
-        changed[0] = True
-        starts = np.flatnonzero(changed)
-        ends = np.append(starts[1:], len(pdf))
+    """Run ``matrix_fn(M, lens) -> {col: (G, L) matrix}`` over each
+    partition's series packed into a NaN-padded matrix, through the
+    shared series runner (see module docstring). NaN outputs map to
+    NULL; results round portably."""
+    def fold(pdf, starts, ends):
+        lens = ends - starts
         v = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
-        M, _lens = kernels.pack_segments(
-            [v[s:e] for s, e in zip(starts, ends)])
-        outs = matrix_fn(M, _lens)
-        for c in new_cols:
-            full = np.full(len(pdf), np.nan)
-            R = outs[c]
-            for g, (s, e) in enumerate(zip(starts, ends)):
-                full[s:e] = R[g, : e - s]
-            pdf[c] = full
-        yield pdf
+        outs = matrix_fn(kernels.pack_series(v, lens), lens)
+        return {c: kernels.unpack_series(outs[c], lens) for c in new_cols}
 
-    out = (
-        df.repartition(*kcols)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(compute, schema)
-    )
+    out = _map_series(df, keys, order, new_cols, fold)
     for c in new_cols:
         out = out.withColumn(
             c, round_portable(F.when(~F.isnan(F.col(c)), F.col(c)))

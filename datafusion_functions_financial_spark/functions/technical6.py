@@ -25,17 +25,17 @@ combinable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..plans.series import (
     ROUND_DP, round_null, round_portable, round_portable_duck,
 )
 from ..sources.tables import load
+from . import kernels
 from .bars import ohlcv_bars
+from .indicators import _map_series
 
 __all__ = ["kama", "hull_ma", "bar_volatility_pk_gk",
            "adaptive_ema_fold2d"]
@@ -96,49 +96,16 @@ def kama(df: DataFrame, value_col: str, keys: list[str],
         .withColumn("__sc", F.expr(f"({sc}) * ({sc})"))
     )
 
-    schema = StructType(
-        prepared.schema.fields + [StructField(out_col, DoubleType(), True)]
-    )
-    kcols = list(keys)
-    vcol, scol = value_col, "__sc"
-
-    def compute_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = (pd.concat(pdfs, ignore_index=True)
-               if len(pdfs) > 1 else pdfs[0])
-        if len(pdf) == 0:
-            return
-        kf = pdf[kcols]
-        shifted = kf.shift()
-        changed = (
-            (kf.ne(shifted) & ~(kf.isna() & shifted.isna()))
-            .any(axis=1).to_numpy()
-        )
-        changed[0] = True
-        starts = np.flatnonzero(changed)
-        ends = np.append(starts[1:], len(pdf))
-        xs = pdf[vcol].to_numpy(dtype=np.float64, na_value=np.nan)
-        ss = pdf[scol].to_numpy(dtype=np.float64, na_value=np.nan)
-        lens = (ends - starts).astype(np.int64)
-        maxlen = int(lens.max())
-        X = np.full((len(starts), maxlen), np.nan)
-        A = np.full((len(starts), maxlen), np.nan)
-        for g, (st, en) in enumerate(zip(starts, ends)):
-            X[g, : en - st] = xs[st:en]
-            A[g, : en - st] = ss[st:en]
-        K = adaptive_ema_fold2d(X, A, lens)
-        out = np.full(len(pdf), np.nan)
-        for g, (st, en) in enumerate(zip(starts, ends)):
-            out[st:en] = K[g, : en - st]
-        pdf[out_col] = out
-        yield pdf
+    def fold(pdf, starts, ends):
+        lens = ends - starts
+        X, A = (kernels.pack_series(
+            pdf[c].to_numpy(dtype=np.float64, na_value=np.nan), lens)
+            for c in (value_col, "__sc"))
+        return {out_col: kernels.unpack_series(
+            adaptive_ema_fold2d(X, A, lens), lens)}
 
     return (
-        prepared.repartition(*keys)
-        .sortWithinPartitions(*keys, *order)
-        .mapInPandas(compute_partition, schema)
+        _map_series(prepared, keys, order, [out_col], fold)
         .drop("__d", "__chg", "__vol", "__sc")
     )
 

@@ -842,6 +842,10 @@ def simhash_candidate_count(df: DataFrame, text_col: str = "text",
     — the same reason this is the scale-safe count at 100 TB, where
     the uncapped pair relation may not be materializable at all.
 
+    Precondition: ``id_col`` is unique. The arithmetic counts ROW
+    pairs, while the join path de-duplicates on ids, so repeated ids
+    inflate this count. An empty input counts 0, not NULL.
+
     Identity with the join path is pinned by
     ``tests/test_simhash_count.py`` (both fingerprint widths, plus the
     duplicate-heavy zipf audit corpus) and re-verified on the audit's
@@ -874,8 +878,8 @@ def simhash_candidate_count(df: DataFrame, text_col: str = "text",
         .groupBy("tk.t", "tk.sg", "tk.k")
         .agg(F.count(F.lit(1)).alias("__m"))
         .agg(F.expr(
-            "CAST(sum(sg * (__m * (__m - 1) DIV 2)) AS BIGINT) "
-            "AS n_candidates"))
+            "coalesce(CAST(sum(sg * (__m * (__m - 1) DIV 2)) AS BIGINT), "
+            "0L) AS n_candidates"))
     )
 
 

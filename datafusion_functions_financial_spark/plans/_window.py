@@ -14,56 +14,56 @@ instead of failing a fresh clone.
 """
 
 REGATE_WINDOW = (
-    "q_funnel_events",
-    "q_latest_order_per_customer",
-    "q_mode_event_type_events",
-    "q_orders_above_cust_avg",
-    "q_orders_cube",
-    "q_orders_exists_bigitem",
-    "q_orders_mad",
-    "q_retention_events",
-    "q_session_stats_events",
-    "q_topk_events_per_user",
-    "q_user_activity_1h_events",
-    "quality_winsorize_lineitem",
-    "resample_ffill_events",
-    "resample_interp_events",
-    "ret_autocorr_lineitem",
-    "roll_beta_lineitem",
-    "roll_bollinger_orders",
-    "roll_corr_lineitem",
-    "roll_drawdown_orders",
-    "roll_moments_orders",
-    "roll_ols_slope_orders",
-    "roll_sharpe_orders",
-    "roll_time_since_high_orders",
-    "roll_volatility_orders",
-    "text_composite_quality_documents",
-    "text_lexical_stats_documents",
-    "text_oov_rate_documents",
-    "text_pmi_bigrams_documents",
-    "text_stats_by_group_documents",
-    "text_top_terms_per_source_documents",
-    "text_unigram_xent_documents",
-    "vocab_remove_stopwords_documents",
-    "asof_events_snapshots_fwd",
-    "barvol_events",
-    "bloom_membership_customers",
-    "cms_token_counts_documents",
-    "dedup_containment_documents",
-    "dedup_representatives_documents",
-    "diff_snapshots_orders",
-    "dq_benford_orders",
-    "dq_unique_keys_lineitem",
-    "emb_projection_embeddings",
-    "ind_adx_events",
-    "ind_aroon_events",
-    "ind_cmo_events",
-    "ind_heikin_ashi_events",
-    "ind_ichimoku_events",
-    "ind_pivots_events",
-    "ind_ppo_events",
-    "ind_stochrsi_events",
+    "ind_trix_events",
+    "link_customers_fuzzy",
+    "micro_amihud_events",
+    "micro_flow_imbalance_events",
+    "micro_roll_spread_events",
+    "micro_volume_poc_events",
+    "q_anomaly_mad_events",
+    "q_arrival_burstiness_events",
+    "q_changepoint_cusum_events",
+    "q_cohort_ltv_orders",
+    "q_custdist_orders",
+    "q_gini_orders",
+    "q_hhi_nation_orders",
+    "q_lorenz_deciles_orders",
+    "q_market_beta_events",
+    "q_market_share_orders",
+    "q_pairwise_corr_events",
+    "q_portfolio_returns_events",
+    "q_seasonality_events",
+    "q_wau_hll_events",
+    "q_yoy_growth_orders",
+    "risk_dd_episodes_events",
+    "risk_sortino_events",
+    "risk_ulcer_events",
+    "risk_var_cvar_events",
+    "semantic_neardup_verified",
+    "str_editdist_suppliers",
+    "text_lang_confusion_documents",
+    "text_rake_keywords_documents",
+    "validate_fk_orphans_orders",
+    "wq_weighted_iqr_lineitem",
+    "wq_weighted_median_lineitem",
+    "asof_events_snapshots_nearest",
+    "asof_events_snapshots_tol",
+    "dedup_cluster_sizes_documents",
+    "dq_ks_two_sample_events",
+    "dq_null_profile_orders",
+    "dq_psi_drift_events",
+    "emb_label_separation_embeddings",
+    "emb_pca_power_embeddings",
+    "graph_copurchase_parts",
+    "graph_degree_customers",
+    "graph_pagerank_nations",
+    "hist_equidepth_lineitem",
+    "ind_chandelier_events",
+    "ind_elder_ray_events",
+    "ind_fractals_events",
+    "ind_hull_ma_events",
+    "ind_kama_events",
+    "ind_vortex_events",
 )
 
 SOURCE_FILES = (
@@ -80,6 +80,7 @@ SOURCE_FILES = (
     "CORRECTNESS_r11.json",
     "CORRECTNESS_r12.json",
     "CORRECTNESS_r13.json",
+    "CORRECTNESS_r14.json",
 )
 
 # 50 slots

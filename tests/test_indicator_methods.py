@@ -1,18 +1,19 @@
-"""The 'partition' (mapInPandas) and 'group' (applyInPandas) execution
-paths of with_indicators must be row-for-row identical — guards the
-fast path against group-boundary bugs."""
+"""with_indicators must be row-for-row identical to a driver-side
+pandas ``groupby(dropna=False)`` through the scalar kernels — guards
+the partition-packed runner against group-boundary bugs."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from datafusion_functions_financial_spark.functions import indicators as ind
+from tests.test_series_runner import assert_same, kernel_reference
 
 SPECS = [ind.sma(5), ind.ema(7), ind.rsi(6), ind.macd()]
+SCHEMA = "k string, seq long, x double, xn double"
 
 
 @pytest.fixture(scope="module")
-def random_series_df(spark):
+def random_rows():
     rng = np.random.default_rng(11)
     rows = []
     # Ragged series lengths incl. shorter-than-window groups; duplicate
@@ -21,9 +22,8 @@ def random_series_df(spark):
         price = 50.0
         for i in range(length):
             price += float(rng.normal(0, 2))
-            rows.append((f"g{g}", i, price))
-    pdf = pd.DataFrame(rows, columns=["k", "seq", "x"])
-    return spark.createDataFrame(pdf)
+            rows.append((f"g{g}", i, price, price))
+    return rows
 
 
 def _collect(df, cols):
@@ -34,51 +34,22 @@ def _collect(df, cols):
 
 
 def test_null_partition_keys_form_one_group(spark):
-    # Null keys must be ONE group in both paths (pandas NaN != NaN would
-    # otherwise split the fast path into per-row groups, silently
+    # Null keys must be ONE group, as in groupBy (pandas NaN != NaN
+    # would otherwise split the runner into per-row groups, silently
     # resetting the indicators).
-    rows = [(None, i, 100.0 + i) for i in range(12)]
-    rows += [("a", i, 200.0 + i) for i in range(12)]
-    pdf = pd.DataFrame(rows, columns=["k", "seq", "x"])
-    df = spark.createDataFrame(pdf)
+    rows = [(None, i, 100.0 + i, None) for i in range(12)]
+    rows += [("a", i, 200.0 + i, None) for i in range(12)]
+    df = spark.createDataFrame(rows, SCHEMA)
     specs = [ind.sma(5), ind.ema(7)]
-    cols = [s.out_col for s in specs]
-    fast = _collect(
-        ind.with_indicators(df, "x", ["seq"], ["k"], specs,
-                            method="partition"),
-        cols,
-    )
-    slow = _collect(
-        ind.with_indicators(df, "x", ["seq"], ["k"], specs, method="group"),
-        cols,
-    )
-    assert fast.keys() == slow.keys()
-    for key in fast:
-        for a, b in zip(fast[key], slow[key]):
-            if a is None or (isinstance(a, float) and np.isnan(a)):
-                assert b is None or (isinstance(b, float) and np.isnan(b)), key
-            else:
-                assert a == b, key
+    got = _collect(ind.with_indicators(df, "x", ["seq"], ["k"], specs),
+                   [s.out_col for s in specs])
+    assert_same(got, kernel_reference(rows, specs))
     # The null group must actually produce values (12 rows > window 5).
-    assert fast[(None, 11)][0] is not None
+    assert got[(None, 11)][0] is not None
 
 
-def test_partition_and_group_methods_agree(random_series_df):
-    cols = [s.out_col for s in SPECS]
-    fast = _collect(
-        ind.with_indicators(random_series_df, "x", ["seq"], ["k"], SPECS,
-                            method="partition"),
-        cols,
-    )
-    slow = _collect(
-        ind.with_indicators(random_series_df, "x", ["seq"], ["k"], SPECS,
-                            method="group"),
-        cols,
-    )
-    assert fast.keys() == slow.keys()
-    for key in fast:
-        for a, b in zip(fast[key], slow[key]):
-            if a is None or (isinstance(a, float) and np.isnan(a)):
-                assert b is None or (isinstance(b, float) and np.isnan(b))
-            else:
-                assert a == b, key  # bit-identical: same kernels
+def test_ragged_series_match_kernels(spark, random_rows):
+    df = spark.createDataFrame(random_rows, SCHEMA)
+    got = _collect(ind.with_indicators(df, "x", ["seq"], ["k"], SPECS),
+                   [s.out_col for s in SPECS])
+    assert_same(got, kernel_reference(random_rows, SPECS))

@@ -40,3 +40,13 @@ def test_count_matches_on_exact_clones(spark):
         df).collect()[0]["n_candidates"]
     assert counted == joined
     assert counted >= 4 * 45
+
+
+def test_count_is_zero_on_empty_input(spark):
+    # sum() over zero groups is NULL; the count contract is 0, like
+    # simhash_candidates(...).count() on the same empty corpus.
+    df = spark.createDataFrame([], "doc_id long, text string")
+    counted = dd.simhash_candidate_count(
+        df).collect()[0]["n_candidates"]
+    assert counted == 0
+    assert dd.simhash_candidates(df).count() == 0

@@ -1,17 +1,17 @@
 #!/usr/bin/env python
-"""r14 plan-pathology audit: explain every bench headline query and
+"""Plan-pathology audit: explain every bench headline query and
 flag row-at-a-time Python (BatchEvalPython), cartesian products /
 broadcast nested-loop joins, and scans of the big tables without
 pushed filters. Explain-only (no execution); writes a JSON summary.
 
-Usage: python tools/plan_audit_r14.py [out.json]
+Usage: python tools/plan_audit.py out.json  (e.g. plans/r14/plan_audit.json)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re  # noqa: F401 (plan regexes)
+import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -19,15 +19,14 @@ sys.path.insert(0, HERE)
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        HERE, "plans", "r14", "plan_audit.json")
+    out_path = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[4]")
-        .appName("plan-audit-r14")
+        .appName("plan-audit")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -43,10 +42,9 @@ def main() -> None:
         all_queries,
     )
 
-    # ADVICE r13: import the bench module's own HEADLINE constant
-    # instead of regexing bench.py source (the regex silently shrank
-    # to a subset under any reformat); assert the census so drift
-    # fails loudly.
+    # Import the bench module's own HEADLINE constant rather than
+    # regexing bench.py source (a regex silently shrinks to a subset
+    # under any reformat); assert the census so drift fails loudly.
     names = list(bench.HEADLINE)
     queries = all_queries()
     missing = [n for n in names if n not in queries]

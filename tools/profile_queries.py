@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""r14 optimization-round profiler: capture explain('formatted') and
-noop-sink wall times for a named list of registry queries at sf0.1.
+"""Profiler: capture explain('formatted') and noop-sink wall times
+for a named list of registry queries at sf0.1.
 
-Usage: python tools/profile_r14.py out_suffix q1 q2 ...
-Writes plans/r14/<query>_<suffix>.txt and prints one timing line per
-query (two runs each; min reported, both shown).
+Usage: python tools/profile_queries.py out_dir out_suffix q1 q2 ...
+Writes <out_dir>/<query>_<suffix>.txt (e.g. out_dir = plans/r14) and
+prints one timing line per query (two runs each; min reported, both
+shown).
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ sys.path.insert(0, HERE)
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -27,7 +28,7 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dffs-profile-r14")
+        .appName("dffs-profile")
         .config("spark.sql.shuffle.partitions", str(2 * int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -44,7 +45,7 @@ def main() -> None:
     )
 
     queries = all_queries()
-    os.makedirs(os.path.join(HERE, "plans", "r14"), exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
 
     # Warm up JVM / Python workers once.
     queries["ind_combined_events"](spark, sf_dir).write.format(
@@ -54,8 +55,8 @@ def main() -> None:
         df = queries[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        with open(os.path.join(HERE, "plans", "r14",
-                               f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"),
+                  "w") as f:
             f.write(plan)
         runs = []
         for _ in range(2):
