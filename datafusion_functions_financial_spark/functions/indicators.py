@@ -28,6 +28,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
 import warnings
 from dataclasses import dataclass
 from typing import Iterable, Sequence
@@ -140,14 +141,16 @@ def with_indicators(
     than this routes through the segmented bucketed-carry path
     (``segmented.with_indicators_segmented``): the series is cut into
     ~``max_rows_per_task``-row time buckets on the first order column
-    (distributed ``percentile_approx`` boundaries) and computed in
-    three parallel passes, so a single symbol with 10^9 ticks is no
+    (distributed ``percentile_approx`` boundaries) and computed bucket
+    by bucket in parallel, so a single symbol with 10^9 ticks is no
     longer one task. Series at or under the cap keep the exact serial
-    kernels. Segmented outputs are mathematically exact but may differ
-    from the serial kernels by ~1 ulp per bucket boundary (affine
-    recurrence reassociation — see ``segmented.py``); leave this OFF
-    when bit-identical output matters. Requires a numeric first
-    ``order_by`` column and NULL-free values in hot series.
+    kernels, bit for bit. Two small eager jobs (hot-key census, bucket
+    bounds) run before the frame is returned. Segmented outputs are
+    mathematically exact but may differ from the serial kernels by ~1
+    ulp per bucket boundary (affine recurrence reassociation — see
+    ``segmented.py``); leave this OFF when bit-identical output matters.
+    Requires a numeric first ``order_by`` column and NULL-free values in
+    hot series.
     """
     specs = list(specs)
     if not specs:
@@ -177,14 +180,24 @@ def with_indicators(
             stacklevel=2,
         )
 
+    return _map_series(df, partition_by, order_by,
+                       [s.out_col for s in specs],
+                       _indicator_fold(specs, value_col))
+
+
+def _indicator_fold(specs: Sequence[IndicatorSpec], value_col: str):
+    """The ``fold`` of ``with_indicators``: every spec's column over the
+    runs ``starts[g]:ends[g]`` of a partition, NaN elsewhere.
+
+    Per value column, the non-null values of the runs are packed once
+    into a (G, maxlen) NaN-padded matrix, so the recursive kernels run
+    PARALLEL ACROSS SERIES (one vectorized step per time index — see
+    kernels.*_fold2d) instead of a Python loop per series; expression
+    trees per element are unchanged, so results stay bit-identical.
+    Runs that amount to only a few long series (a keyless call, a hot
+    key) run the scalar kernels series by series instead."""
+
     def fold(pdf, starts, ends):
-        # Per value column: pack the non-null runs once into a
-        # (G, maxlen) NaN-padded matrix, so the recursive kernels run
-        # PARALLEL ACROSS SERIES (one vectorized step per time index —
-        # see kernels.*_fold2d) instead of a Python loop per series;
-        # expression trees per element are unchanged, so results stay
-        # bit-identical. A partition of few long series (a keyless
-        # call, a hot key) runs the scalar kernels per series instead.
         columns = {}
         outs = {}
         for s in specs:
@@ -195,7 +208,14 @@ def with_indicators(
                 cum = np.concatenate(([0], np.cumsum(nn)))
                 lens = cum[ends] - cum[starts]
                 packed = None
-                if lens.sum() >= _ROW_PARALLEL_MIN_SERIES * lens.max():
+                n = lens.sum()
+                if len(lens) and n >= _ROW_PARALLEL_MIN_SERIES * lens.max():
+                    if n < cum[-1]:
+                        # the runs leave rows out: keep only theirs
+                        edges = np.zeros(len(arr) + 1, dtype=np.int64)
+                        np.add.at(edges, starts, 1)
+                        np.add.at(edges, ends, -1)
+                        nn = nn & (np.cumsum(edges[:-1]) > 0)
                     pos = np.flatnonzero(nn)
                     packed = (pos, lens,
                               kernels.pack_series(arr[pos], lens))
@@ -214,8 +234,34 @@ def with_indicators(
             outs[s.out_col] = out
         return outs
 
-    return _map_series(df, partition_by, order_by,
-                       [s.out_col for s in specs], fold)
+    return fold
+
+
+def _partition_frame(batches) -> pd.DataFrame | None:
+    """One ``mapInPandas`` partition as one frame (None when empty)."""
+    pdfs = list(batches)
+    if not pdfs:
+        return None
+    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    return pdf if len(pdf) else None
+
+
+def _runs(pdf: pd.DataFrame, keys: Sequence[str]):
+    """(starts, ends) of the runs of equal ``keys`` in a frame sorted
+    on them; no keys make the frame one run. Null-safe: pandas
+    NaN != NaN is True, so a plain keys.ne(shift) would start a new
+    run on EVERY null-keyed row, silently resetting the folds (groupBy
+    treats nulls as one group)."""
+    kdf = pdf[list(keys)]
+    shifted = kdf.shift()
+    changed = (
+        (kdf.ne(shifted) & ~(kdf.isna() & shifted.isna()))
+        .any(axis=1)
+        .to_numpy()
+    )
+    changed[0] = True
+    starts = np.flatnonzero(changed)
+    return starts, np.append(starts[1:], len(pdf))
 
 
 def _map_series(df: DataFrame, keys: Sequence[str], order: Sequence[str],
@@ -224,9 +270,9 @@ def _map_series(df: DataFrame, keys: Sequence[str], order: Sequence[str],
     per-series indicator: shuffle on ``keys`` (one partition when there
     are none), sort within partitions by (keys, order) in the JVM, then
     one ``mapInPandas`` call per shuffle partition. Each call finds the
-    series bounds — row ``starts[g]`` up to ``ends[g]`` — and appends
-    the float64 columns of ``fold(pdf, starts, ends) -> {col: array}``.
-    This is the one place that knows the series-boundary rule."""
+    series bounds (``_runs``) — row ``starts[g]`` up to ``ends[g]`` —
+    and appends the float64 columns of
+    ``fold(pdf, starts, ends) -> {col: array}``."""
     keys, order = list(keys), list(order)
     schema = StructType(
         df.schema.fields + [StructField(c, DoubleType(), True)
@@ -234,27 +280,10 @@ def _map_series(df: DataFrame, keys: Sequence[str], order: Sequence[str],
     )
 
     def compute(batches):
-        pdfs = list(batches)
-        if not pdfs:
+        pdf = _partition_frame(batches)
+        if pdf is None:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if len(pdf) == 0:
-            return
-        # Rows arrive sorted by (keys..., order...). Null-safe compare:
-        # pandas NaN != NaN is True, so a plain keys.ne(shift) would
-        # start a new series on EVERY null-keyed row, silently resetting
-        # the folds (groupBy treats nulls as one group). With no keys
-        # the partition is one series.
-        kdf = pdf[keys]
-        shifted = kdf.shift()
-        changed = (
-            (kdf.ne(shifted) & ~(kdf.isna() & shifted.isna()))
-            .any(axis=1)
-            .to_numpy()
-        )
-        changed[0] = True
-        starts = np.flatnonzero(changed)
-        ends = np.append(starts[1:], len(pdf))
+        starts, ends = _runs(pdf, keys)
         outs = fold(pdf, starts, ends)
         for c in new_cols:
             pdf[c] = outs[c]
@@ -263,6 +292,23 @@ def _map_series(df: DataFrame, keys: Sequence[str], order: Sequence[str],
     shuffled = df.repartition(*keys) if keys else df.repartition(1)
     return (shuffled.sortWithinPartitions(*keys, *order)
             .mapInPandas(compute, schema))
+
+
+def _struct_literal(row, fields: Sequence[StructField]) -> Column:
+    """``row``'s values of ``fields`` as one struct literal."""
+    return F.struct(*[F.lit(row[f.name]).cast(f.dataType).alias(f.name)
+                      for f in fields])
+
+
+def _broadcast_left_join(df: DataFrame, small: DataFrame,
+                         keys: Sequence[str]) -> DataFrame:
+    """``df`` left-joined to the broadcast ``small`` relation on
+    ``keys``, NULL matching NULL as in ``groupBy``."""
+    tmp = [f"__k{i}" for i in range(len(keys))]
+    small = small.toDF(*[dict(zip(keys, tmp)).get(c, c)
+                         for c in small.columns])
+    cond = [F.col(k).eqNullSafe(F.col(t)) for k, t in zip(keys, tmp)]
+    return df.join(F.broadcast(small), cond, "left").drop(*tmp)
 
 
 def _split_hot_series(
@@ -275,21 +321,22 @@ def _split_hot_series(
 ) -> DataFrame:
     """Route series longer than ``max_rows_per_task`` through the
     segmented bucketed-carry path; everything else keeps the serial
-    kernels. Scale shape:
+    kernels. The input is read three times:
 
-    - per-series row counts: one map-side-combined groupBy — tiny output
-      (one row per series), and the over-cap key list is by definition
-      FEW rows (hot keys), so it broadcasts into semi/anti joins — the
-      big table is never shuffled for the split decision;
-    - bucket boundaries for hot series: distributed
-      ``percentile_approx`` over the hot rows only, one array per hot
-      series, broadcast back;
-    - the two paths union; each sees one shuffle on its own keys.
-
-    One driver scalar (the max hot-series length) picks the global
-    bucket count; no row data reaches the driver.
+    1. hot-key census: one eager collect of the over-cap keys and their
+       row counts (a map-side-combined count, one row per hot key); the
+       longest fixes the bucket count, which ``percentile_approx``
+       needs as a literal. No hot key: the plain path.
+    2. bucket bounds: one eager ``percentile_approx`` per hot key over
+       the hot rows only, collected (hot keys x buckets values) and
+       broadcast back as a relation, so the plan does not grow with
+       the number of hot keys.
+    3. the returned frame: every row gets its bucket (cold rows 0) and
+       ``segmented._segmented`` runs cold and hot series in one pass
+       over one exchange on (keys, bucket); cold series come out of
+       the same kernels as ``with_indicators``, bit for bit.
     """
-    from .segmented import with_indicators_segmented  # circular-safe
+    from .segmented import _segmented  # circular-safe
 
     for s in specs:
         if s.value_col is not None and s.value_col != value_col:
@@ -308,63 +355,61 @@ def _split_hot_series(
             "specs (the seed fold may not span a bucket boundary)"
         )
 
+    out_cols = df.columns + [s.out_col for s in specs]
     keys = list(partition_by)
-    drop_cols: list[str] = ["__bucket"]
     if not keys:
-        df = df.withColumn("__series", F.lit(1))
         keys = ["__series"]
-        drop_cols.append("__series")
+        src = df.withColumn("__series", F.lit(1))
+    else:
+        src = df
 
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-    hot_keys = counts.filter(F.col("__n") > max_rows_per_task)
-    max_n = hot_keys.agg(F.max("__n")).first()[0]
+    # ---- read 1: hot-key census ------------------------------------------
+    census = (
+        src.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > max_rows_per_task)
+        .collect()
+    )
+    if not census:
+        return with_indicators(df, value_col, order_by, partition_by, specs)
 
-    base_cols = [c for c in df.columns if c not in ("__series",)]
-    out_cols = base_cols + [s.out_col for s in specs]
-
-    if max_n is None:
-        # No hot series: plain path (common case — zero overhead beyond
-        # the counts agg).
-        out = with_indicators(
-            df.drop("__series") if "__series" in drop_cols else df,
-            value_col, order_by, partition_by, specs,
-        )
-        return out.select(*out_cols)
-
-    hot = F.broadcast(hot_keys.select(*keys))
-    cold_df = df.join(hot, keys, "left_anti")
-    hot_df = df.join(hot, keys, "left_semi")
-
-    import math
-
-    n_buckets = math.ceil(max_n / max_rows_per_task)
+    # ---- read 2: bucket bounds of the hot series -------------------------
+    # Struct IN matches NULL fields like groupBy (and becomes a hash-set
+    # lookup); a semi join with the census would cost one more job.
+    key_fields = [src.schema[k] for k in keys]
+    hot = [_struct_literal(r, key_fields) for r in census]
+    n_buckets = math.ceil(max(r["__n"] for r in census) / max_rows_per_task)
     ord0 = order_by[0]
     probs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
-    bounds = hot_df.groupBy(*keys).agg(
-        F.expr(
-            f"percentile_approx({ord0}, array({probs}), 10000)"
-        ).alias("__bounds")
+    bounds = (
+        src.filter(F.struct(*keys).isin(*hot))
+        .groupBy(*keys)
+        .agg(F.expr(f"percentile_approx({ord0}, array({probs}), 10000)")
+             .alias("__bounds"))
     )
+    # Rebuilt in the JVM: a createDataFrame of the collected rows would
+    # be a Python RDD, whose scan forks Python workers of its own.
+    fields = bounds.schema.fields
+    bounds = df.sparkSession.range(1, numPartitions=1).select(F.inline(
+        F.array(*[_struct_literal(r, fields) for r in bounds.collect()])))
+
+    # ---- read 3: one pass over cold and hot rows -------------------------
+    hot_row = F.col("__bounds").isNotNull()
     bucketed = (
-        hot_df.join(F.broadcast(bounds), keys)
+        _broadcast_left_join(src, bounds, keys)
+        .withColumn("__hot", hot_row)
         # Monotone in ord0 by construction: the bucket is the number of
         # boundaries at or below the row's order value.
         .withColumn(
             "__bucket",
-            F.expr(f"size(filter(__bounds, x -> x <= {ord0}))")
-            .cast("long"),
+            F.when(hot_row,
+                   F.expr(f"size(filter(__bounds, x -> x <= {ord0}))"))
+            .otherwise(F.lit(0)).cast("long"),
         )
         .drop("__bounds")
     )
-    hot_out = with_indicators_segmented(
-        bucketed, value_col, order_by, keys, "__bucket", specs
-    ).drop(*drop_cols)
-
-    cold_out = with_indicators(
-        cold_df.drop("__series") if "__series" in drop_cols else cold_df,
-        value_col, order_by, partition_by, specs,
-    )
-    return cold_out.select(*out_cols).unionByName(hot_out.select(*out_cols))
+    return _segmented(
+        bucketed, value_col, order_by, keys, "__bucket", specs, "__hot"
+    ).select(*out_cols)
 
 
 def sma_native(

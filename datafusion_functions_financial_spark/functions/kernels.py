@@ -145,11 +145,13 @@ def rsi_kernel(values, window: int) -> np.ndarray:
             return 100.0
         return 100.0 - (100.0 / (1.0 + ag / al))
 
-    comp_out[window] = _rsi(avg_gain, avg_loss)
-    for i in range(window, chg.shape[0]):
-        avg_gain = avg_gain * one_minus + gains[i] * alpha
-        avg_loss = avg_loss * one_minus + losses[i] * alpha
-        comp_out[i + 1] = _rsi(avg_gain, avg_loss)
+    # ag / al overflows to inf when al is subnormal: the RSI is 100.0
+    with np.errstate(over="ignore"):
+        comp_out[window] = _rsi(avg_gain, avg_loss)
+        for i in range(window, chg.shape[0]):
+            avg_gain = avg_gain * one_minus + gains[i] * alpha
+            avg_loss = avg_loss * one_minus + losses[i] * alpha
+            comp_out[i + 1] = _rsi(avg_gain, avg_loss)
     out[mask] = comp_out
     return out
 
@@ -237,9 +239,11 @@ def rsi_fold2d(M: np.ndarray, lens: np.ndarray, window: int) -> np.ndarray:
         avg_loss = sl / float(window)
 
         def _rsi_vec(ag: np.ndarray, al: np.ndarray) -> np.ndarray:
-            return np.where(
-                al == 0.0, 100.0, 100.0 - (100.0 / (1.0 + ag / al))
-            )
+            # ag / al overflows to inf when al is subnormal: RSI 100.0
+            with np.errstate(over="ignore"):
+                return np.where(
+                    al == 0.0, 100.0, 100.0 - (100.0 / (1.0 + ag / al))
+                )
 
         out[:, window] = _rsi_vec(avg_gain, avg_loss)
         for i in range(window, chg.shape[1]):

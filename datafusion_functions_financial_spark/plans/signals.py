@@ -20,6 +20,8 @@ in Catalyst (predicate pushdown + whole-stage codegen apply).
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -83,7 +85,11 @@ def detect_ma_crossover_signals(
     """SMA fast/slow crossover detector (reference windows: 20/50).
 
     ``method="kernel"`` runs the null-skipping indicator kernels
-    (exact reference semantics for any input). ``method="native"``
+    (exact reference semantics for any input) in one
+    ``indicators._map_series`` pass: the same fold that computes both
+    SMAs also shifts them one row within each series into
+    ``prev_fast``/``prev_slow`` (the reference's ``LAG``), so the
+    detector shuffles and sorts the data once. ``method="native"``
     uses the pure-JVM windowed-avg SMA (``ind.sma_native``) — bit-
     identical whenever ``value_col`` has no NULLs/NaNs, and the whole
     detector then stays in whole-stage codegen with ONE shuffle (both
@@ -96,17 +102,27 @@ def detect_ma_crossover_signals(
                              fast, f_col)
         out = ind.sma_native(out, value_col, order_by, partition_by,
                              slow, s_col)
+        w = Window.partitionBy(*partition_by).orderBy(*order_by)
+        out = (out.withColumn("prev_fast", F.lag(f_col).over(w))
+               .withColumn("prev_slow", F.lag(s_col).over(w)))
     elif method == "kernel":
-        out = ind.with_indicators(
-            df, value_col, order_by, partition_by,
-            [ind.sma(fast, f_col), ind.sma(slow, s_col)],
-        )
+        smas = ind._indicator_fold(
+            [ind.sma(fast, f_col), ind.sma(slow, s_col)], value_col)
+
+        def fold(pdf, starts, ends):
+            outs = smas(pdf, starts, ends)
+            for col, prev in ((f_col, "prev_fast"), (s_col, "prev_slow")):
+                # the previous row's value within its series
+                lagged = np.roll(outs[col], 1)
+                lagged[starts] = np.nan
+                outs[prev] = lagged
+            return outs
+
+        out = ind._map_series(df, partition_by, order_by,
+                              [f_col, s_col, "prev_fast", "prev_slow"], fold)
     else:
         raise ValueError("method must be 'kernel' or 'native'")
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
     fa, sl = F.col(f_col), F.col(s_col)
-    pf, ps = F.lag(f_col).over(w), F.lag(s_col).over(w)
-    out = out.withColumn("prev_fast", pf).withColumn("prev_slow", ps)
     pf, ps = F.col("prev_fast"), F.col("prev_slow")
     notnan = ~F.isnan(fa) & ~F.isnan(sl) & ~F.isnan(pf) & ~F.isnan(ps)
     crossed = ((pf <= ps) & (fa > sl)) | ((pf >= ps) & (fa < sl))

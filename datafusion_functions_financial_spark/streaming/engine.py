@@ -243,11 +243,10 @@ class StreamingProcessor:
         self._handlers.append(handler)
 
     def process_tick(self, tick: MarketTick) -> StreamingIndicatorValues:
-        state = self._indicators.setdefault(
-            tick.symbol,
-            StreamingIndicators(tick.symbol, self.window_size,
-                                self.seed_mode),
-        )
+        state = self._indicators.get(tick.symbol)
+        if state is None:
+            state = self._indicators[tick.symbol] = StreamingIndicators(
+                tick.symbol, self.window_size, self.seed_mode)
         values = state.update(tick)
         for signal in StreamingSignalDetector(values).detect_signals():
             for handler in self._handlers:

@@ -61,3 +61,42 @@ def test_macd_via_fold2d_matches_scalar(series):
     for g, c in enumerate(comp):
         scalar = K.macd_kernel(c)
         assert _identical(R[g, : len(c)], scalar)
+
+
+def _rsi_python(comp, window):
+    """Reference RSI in Python floats, whose division overflows to inf
+    without a warning."""
+    chg = [b - a for a, b in zip(comp[:-1], comp[1:])]
+    gains = [c if c > 0.0 else 0.0 for c in chg]
+    losses = [-c if c < 0.0 else 0.0 for c in chg]
+    ag, al = sum(gains[:window]) / window, sum(losses[:window]) / window
+    out = [float("nan")] * len(comp)
+    for i in range(window, len(chg) + 1):
+        if i > window:
+            ag = ag * (1.0 - 1.0 / window) + gains[i - 1] * (1.0 / window)
+            al = al * (1.0 - 1.0 / window) + losses[i - 1] * (1.0 / window)
+        out[i] = 100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
+    return np.array(out)
+
+
+def test_rsi_subnormal_average_loss_does_not_warn():
+    # A subnormal average loss makes ag / al overflow to inf; the RSI
+    # of 100.0 is right and no RuntimeWarning may reach the caller.
+    import warnings
+
+    from datafusion_functions_financial_spark.functions.segmented import (
+        _rsi_continue,
+    )
+
+    comp = np.array([0.0, 1e-310, 0.0, 1.0, 2.0, 3.0, 4.0])
+    want = _rsi_python(comp.tolist(), 2)
+    assert want[-1] == 100.0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _identical(K.rsi_kernel(comp, 2), want)
+        M, lens = K.pack_segments([comp, comp[:3]])
+        R = K.rsi_fold2d(M, lens, 2)
+        assert _identical(R[0], want)
+        # Continuing from a carry whose average loss is subnormal.
+        cont = _rsi_continue(np.array([1.0, 2.0]), 2, 0.0, 1e-310, 0.0)
+    assert (cont == 100.0).all()

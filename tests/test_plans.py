@@ -30,6 +30,15 @@ def test_combined_indicators_single_shuffle(spark, sf_dir):
     assert plan.count("MapInPandas") == 1, plan
 
 
+def test_ma_crossover_kernel_single_shuffle(spark, sf_dir):
+    plan = plan_of(spark, sf_dir, "signals_ma_crossover_events")
+    # The fold that computes both SMAs also lags them: no window stage,
+    # so the data is shuffled and sorted once.
+    assert count_exchanges(plan) == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Window" not in plan, plan
+
+
 def test_sma_native_no_python(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "ind_sma_native_events")
     assert "Window" in plan

@@ -213,3 +213,26 @@ def test_holt_matches_scalar_kernel(spark, source, rows):
                       ["level", "trend"])
     assert_same(got, per_series(
         rows, lambda g: forecast.holt_kernel(g["x"].to_numpy())))
+
+
+@pytest.mark.parametrize("lengths", [LENGTHS, MANY_SHORT],
+                         ids=["few_long", "many_short"])
+def test_fold_over_a_subset_of_runs(lengths):
+    # The segmented output pass folds only the runs without a carry;
+    # the fold must fill exactly those runs, as the scalar kernels
+    # would, and leave every other row NaN.
+    rows = sorted(make_rows(lengths), key=lambda r: (r[0] or "", r[1]))
+    pdf = pd.DataFrame(rows, columns=["k", "seq", "x", "xn"])
+    starts, ends = ind._runs(pdf, ["k"])
+    pick = np.arange(len(starts)) % 3 != 1
+    fold = ind._indicator_fold(SPECS, "x")
+    outs = fold(pdf, starts[pick], ends[pick])
+    inside = np.zeros(len(pdf), dtype=bool)
+    for st, en in zip(starts[pick], ends[pick]):
+        inside[st:en] = True
+        for s in SPECS:
+            v = pdf[s.value_col or "x"].to_numpy(float)[st:en]
+            assert np.array_equal(outs[s.out_col][st:en], SCALAR[s.kind](v, s),
+                                  equal_nan=True), (s.out_col, st)
+    for s in SPECS:
+        assert np.isnan(outs[s.out_col][~inside]).all(), s.out_col

@@ -139,6 +139,26 @@ def test_processor_callbacks_and_multi_symbol():
     )
 
 
+def test_processor_builds_one_state_per_symbol(monkeypatch):
+    # process_tick must not build (and throw away) a fresh
+    # StreamingIndicators on every tick.
+    from datafusion_functions_financial_spark.streaming import engine
+
+    built = []
+
+    class Counting(engine.StreamingIndicators):
+        def __init__(self, symbol, *args):
+            built.append(symbol)
+            super().__init__(symbol, *args)
+
+    monkeypatch.setattr(engine, "StreamingIndicators", Counting)
+    proc = StreamingProcessor(window_size=3)
+    for sym in ("A", "B"):
+        for t in make_ticks(sym, [float(p) for p in range(100, 110)]):
+            proc.process_tick(t)
+    assert sorted(built) == ["A", "B"]
+
+
 def test_reference_seed_mode_quirk():
     # seed_mode='reference' re-seeds whenever avg_gain == 0 with a full
     # buffer (streaming.rs:134); after an all-loss window the two modes

@@ -88,9 +88,17 @@ def test_validate_minute_aggs_partitioned(spark):
     )
 
     df = spark.createDataFrame(minute_rows(), MINUTE_AGGS)
-    report = validate_minute_aggs_partitioned(
-        df, keys=["ticker"], ts_col="window_start", gap_ns=2 * NS_MINUTE
-    )
+    sc = spark.sparkContext
+    sc.setJobGroup("validate-partitioned", "one action")
+    try:
+        report = validate_minute_aggs_partitioned(
+            df, keys=["ticker"], ts_col="window_start", gap_ns=2 * NS_MINUTE
+        )
+        # One action (the test session runs without AQE: one job).
+        jobs = sc.statusTracker().getJobIdsForGroup("validate-partitioned")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 1
     # Only AAA's minute-59 -> minute-66 jump (7 min) exceeds 2 min;
     # BBB is consecutive and never produces cross-ticker false gaps.
     assert report.checks["Time Gaps"] == 1
@@ -152,3 +160,53 @@ def test_keyed_gaps_plan_has_no_single_partition_sort(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SinglePartition" not in plan, plan
+
+
+def test_validate_minute_aggs_partitioned_empty_input(spark):
+    # A sum over no groups is NULL: the report must still read zeros.
+    from datafusion_functions_financial_spark.plans.validate import (
+        validate_minute_aggs_partitioned,
+    )
+
+    report = validate_minute_aggs_partitioned(
+        spark.createDataFrame([], MINUTE_AGGS))
+    assert report.total_rows == 0
+    assert report.checks == {"Negative Values": 0, "Time Gaps": 0,
+                             "Logic Errors": 0}
+    assert report.passed
+
+
+@pytest.mark.slow
+def test_validate_minute_aggs_partitioned_matches_global_per_key(spark):
+    # Per key (a NULL ticker among them), the partitioned validator
+    # reports what the reference's global validator reports on that
+    # key's rows, including a gap that straddles a day bucket.
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_financial_spark.plans.validate import (
+        validate_minute_aggs_partitioned,
+    )
+
+    day = 86_400 * 1_000_000_000
+    base = 1_700_006_400 * 1_000_000_000  # a UTC midnight
+    rows = minute_rows()
+    for ticker in ("AAA", None):
+        # Ten minutes before midnight, then ten minutes after: one gap
+        # whose two rows fall in different day buckets.
+        for ts in (base + day - 10 * NS_MINUTE, base + day + 10 * NS_MINUTE):
+            rows.append((ticker, ts, 10.0, 11.0, 9.0, 10.5, 1000))
+    rows.append((None, base + 2 * day, 10.0, 8.0, 9.0, 10.5, -1))
+    df = spark.createDataFrame(rows, MINUTE_AGGS)
+
+    def as_tuple(r):
+        return (r.total_rows, r.checks["Negative Values"],
+                r.checks["Time Gaps"], r.checks["Logic Errors"])
+
+    total = [0, 0, 0, 0]
+    for ticker in ("AAA", "BBB", None):
+        one = df.filter(F.col("ticker").eqNullSafe(F.lit(ticker)))
+        want = as_tuple(validate_minute_aggs(one))
+        assert as_tuple(validate_minute_aggs_partitioned(one)) == want
+        total = [a + b for a, b in zip(total, want)]
+    assert as_tuple(validate_minute_aggs_partitioned(df)) == tuple(total)
+    assert total[2] >= 3  # AAA's 7-minute gap and both midnight gaps
