@@ -19,9 +19,14 @@ Public surface:
   search (brute-force + LSH ANN), text analysis, multimodal plumbing.
 """
 
+from . import _pyworker
 from .functions import indicators
 from .functions.sql import register, sql_with_indicators
 
 __version__ = "0.1.0"
+
+# Python workers only: keeps each reused worker's task from re-reading
+# pyspark.zip (see _pyworker).
+_pyworker.install()
 
 __all__ = ["indicators", "register", "sql_with_indicators", "__version__"]

@@ -35,9 +35,11 @@ from typing import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from . import kernels
@@ -300,6 +302,30 @@ def _struct_literal(row, fields: Sequence[StructField]) -> Column:
                       for f in fields])
 
 
+def literal_relation(spark, rows: Sequence[Sequence],
+                     schema: StructType | str) -> DataFrame:
+    """A small driver-side relation of ``rows`` (tuples in ``schema``'s
+    field order), handed to the JVM as one Arrow table: a
+    ``LocalRelation`` up to ``spark.sql.execution.arrow.
+    localRelationThreshold``, a JVM-side RDD of Arrow batches above it.
+    ``spark.createDataFrame`` of a Python list would plan a Python RDD
+    (``Scan ExistingRDD``), whose scan forks Python workers of its own;
+    a ``range(1)`` plus ``inline`` of struct literals stays in the JVM
+    but costs ~8 ms per row to build and plan."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    # Internal values (timestamps as epoch microseconds read in the
+    # driver's local time zone, dates as days) are what the Arrow types
+    # hold, so the conversion matches createDataFrame's.
+    internal = [schema.toInternal(r) for r in rows]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type)
+         for i, f in enumerate(arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def _broadcast_left_join(df: DataFrame, small: DataFrame,
                          keys: Sequence[str]) -> DataFrame:
     """``df`` left-joined to the broadcast ``small`` relation on
@@ -386,11 +412,8 @@ def _split_hot_series(
         .agg(F.expr(f"percentile_approx({ord0}, array({probs}), 10000)")
              .alias("__bounds"))
     )
-    # Rebuilt in the JVM: a createDataFrame of the collected rows would
-    # be a Python RDD, whose scan forks Python workers of its own.
-    fields = bounds.schema.fields
-    bounds = df.sparkSession.range(1, numPartitions=1).select(F.inline(
-        F.array(*[_struct_literal(r, fields) for r in bounds.collect()])))
+    bounds = literal_relation(df.sparkSession, bounds.collect(),
+                              bounds.schema)
 
     # ---- read 3: one pass over cold and hot rows -------------------------
     hot_row = F.col("__bounds").isNotNull()

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
+from ..functions.indicators import literal_relation
 from ..plans.series import round_portable, round_portable_duck
 from ..sources.tables import load
 
@@ -74,8 +75,8 @@ def _min_dist(emb: DataFrame, centers: list, method: str) -> DataFrame:
         ) + ")" if len(centers) > 1 else _SQDIST.format(
             b=_lit_array(centers[0][1]))
         return emb.withColumn("__d", F.expr(mind))
-    spark = emb.sparkSession
-    cent = spark.createDataFrame(
+    cent = literal_relation(
+        emb.sparkSession,
         [(int(cid), [float(x) for x in vec]) for cid, vec in centers],
         "cid long, cvec array<double>")
     scored = emb.crossJoin(F.broadcast(cent)).select(
@@ -125,7 +126,7 @@ def kcenter_select(df: DataFrame, vec_col: str = "embedding",
         row = emb.filter(F.col("vec_id") == vid).collect()[0]
         centers.append((vid, list(row["embedding"])))
         out.append((rank, vid, float(pick["d"])))
-    res = spark.createDataFrame(out, StructType([
+    res = literal_relation(spark, out, StructType([
         StructField("rank", LongType()),
         StructField("vec_id", LongType()),
         StructField("sel_dist", DoubleType()),

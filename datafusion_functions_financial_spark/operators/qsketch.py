@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.indicators import literal_relation
 from ..plans.series import round_portable, round_portable_duck
 from ..sources.tables import load
 
@@ -96,8 +97,7 @@ def sketch_quantiles(sk: DataFrame, group_cols: list[str],
         sk.withColumn("__cum", F.sum("__c").over(wc))
         .withColumn("__n", F.sum("__c").over(wn))
     )
-    ps_df = spark.createDataFrame([(float(p),) for p in ps],
-                                  "p double")
+    ps_df = literal_relation(spark, [(float(p),) for p in ps], "p double")
     t = "p * CAST(__n AS DOUBLE)"
     est = (
         f"__lo + (__hi - __lo) / {float(n_buckets)!r} "

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.indicators import literal_relation
 from ..plans.series import round_portable, round_portable_duck
 from ..sources.tables import load
 
@@ -135,7 +136,7 @@ def distributed_median(df: DataFrame, value_col: str, group_col: str,
                                    StructType)
 
     def _frame(rows, fields):
-        return spark.createDataFrame(rows, StructType(fields))
+        return literal_relation(spark, rows, StructType(fields))
 
     n_groups = df.select(group_col).distinct().limit(
         max_groups + 1).count()

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.indicators import literal_relation
 from ..sources.tables import load
 from .series import ROUND_DP
 
@@ -449,9 +450,7 @@ def band_join(df: DataFrame, value_col: str, bands: DataFrame,
 
 
 def _q_orders_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = spark.createDataFrame(
-        _BANDS, "band string, lo long, hi long"
-    )
+    bands = literal_relation(spark, _BANDS, "band string, lo long, hi long")
     orders = load(spark, sf_dir, "orders")
     joined = band_join(orders, "o_totalprice", bands)
     return joined.groupBy("band").agg(

@@ -28,6 +28,7 @@ from typing import Mapping
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.indicators import literal_relation
 from ..sources.tables import load
 from .series import round_portable, round_portable_duck
 
@@ -46,7 +47,7 @@ BUCKET_NS = 86_400 * 1_000_000_000
 def _weights_df(spark: SparkSession,
                 weights_bp: Mapping[int, int]) -> DataFrame:
     rows = [(int(k), int(w)) for k, w in sorted(weights_bp.items())]
-    return spark.createDataFrame(rows, "key bigint, w_bp bigint")
+    return literal_relation(spark, rows, "key bigint, w_bp bigint")
 
 
 def _bucket_prices(df: DataFrame, key_col: str, ts_ns_col: str,

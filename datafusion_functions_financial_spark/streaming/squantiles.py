@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.indicators import literal_relation
 from ..operators.qsketch import N_BUCKETS, _bucket_expr
 from ..plans.series import round_portable
 
@@ -82,8 +83,7 @@ def windowed_sketch_quantiles(counts: DataFrame, ps: tuple,
         counts.withColumn("__cum", F.sum("__c").over(wc))
         .withColumn("__n", F.sum("__c").over(wn))
     )
-    ps_df = spark.createDataFrame([(float(p),) for p in ps],
-                                  "p double")
+    ps_df = literal_relation(spark, [(float(p),) for p in ps], "p double")
     t = "p * CAST(__n AS DOUBLE)"
     est = (
         f"{float(lo)!r} + ({float(hi)!r} - {float(lo)!r}) "

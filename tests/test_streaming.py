@@ -279,9 +279,10 @@ def test_signal_stream_end_to_end(spark, tmp_path):
     for t in ticks:
         proc.process_tick(t)
     assert expected, "test vector must fire signals"
-    assert sorted(fired) == sorted(
-        (k, ts, pytest.approx(st)) for k, ts, st in expected
-    ) or len(fired) == len(expected)
+    got, want = sorted(fired), sorted(expected)
+    assert [(k, ts) for k, ts, _ in got] == [(k, ts) for k, ts, _ in want]
+    for (k, ts, g), (_, _, e) in zip(got, want):
+        assert g == pytest.approx(e), (k, ts)
     got_kinds = {k for k, _, _ in fired}
     assert "Overbought" in got_kinds and "Oversold" in got_kinds
     assert "VolumeSpike" in got_kinds
