@@ -15,9 +15,14 @@ oracle), which the tests exploit.
 
 Scale notes: state lives in the executors' state store, keyed by
 symbol (shuffle on symbol only); signal detection adds no shuffle; the
-reference's no-watermark arrival-order design maps to processing-time
-mode — event-time watermarking is available via ``withWatermark``
-upstream if late-data semantics are wanted.
+callback bridge evaluates each micro-batch in one Spark job, every
+state partition in parallel, and hands the rows to the handler one
+Arrow record batch at a time; the number of state partitions is
+``spark.sql.shuffle.partitions`` at the query's first start, kept by
+the checkpoint from then on; the reference's no-watermark
+arrival-order design maps to processing-time mode — event-time
+watermarking is available via ``withWatermark`` upstream if late-data
+semantics are wanted.
 """
 
 from __future__ import annotations
@@ -25,8 +30,9 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -207,6 +213,23 @@ def detect_signal_exprs(enriched: DataFrame) -> DataFrame:
     )
 
 
+def _arrow_rows(table: pa.Table, schema: StructType) -> Iterator[Row]:
+    """The rows of a collected Arrow table as ``collect()`` builds them:
+    each record batch's columns in Spark's internal form (timestamps as
+    epoch microseconds), then ``schema.fromInternal`` per row, so values
+    and Python types match (naive local datetimes). Python objects exist
+    for one record batch at a time. Covers the signal schema's column
+    types: strings, doubles and timestamps."""
+    for batch in table.to_batches():
+        cols = []
+        for col in batch.columns:
+            if pa.types.is_timestamp(col.type):  # always "us" from Spark
+                col = col.cast(pa.int64())
+            cols.append(col.to_pylist())
+        for values in zip(*cols):
+            yield schema.fromInternal(values)
+
+
 def start_signal_stream(
     ticks: DataFrame,
     window_size: int,
@@ -214,19 +237,25 @@ def start_signal_stream(
     seed_mode: str = "batch",
     **write_opts,
 ):
-    """End-to-end streaming query: enrich -> detect -> foreachBatch
-    handler(list[Row]) per micro-batch (the reference's callback
+    """End-to-end streaming query: enrich -> detect -> foreachBatch ->
+    ``handler(row)`` for every signal row (the reference's callback
     bridge, streaming.rs:295-320).
 
-    The bridge streams rows to the driver-side handler with
-    ``toLocalIterator()`` — one partition resident at a time — so an
-    alert-storm micro-batch holds O(partition) rows on the driver, not
-    the whole batch (VERDICT r03 item 7)."""
+    Each micro-batch runs as one Spark job (``toArrow()``), every state
+    partition in parallel; ``toLocalIterator()`` would run one job per
+    partition, one after another. The handler gets the same ``Row``
+    values and Python types as ``collect()`` gives. Driver memory per
+    micro-batch: its signal rows as Arrow (columnar, ~50 bytes a row)
+    plus Python ``Row`` objects for one record batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) at a time.
+
+    The state-partition count is ``spark.sql.shuffle.partitions`` when
+    the query first starts; its checkpoint keeps it from then on."""
     enriched = streaming_indicators(ticks, window_size, seed_mode)
     signals = detect_signal_exprs(enriched)
 
     def dispatch(batch_df: DataFrame, _batch_id: int) -> None:
-        for row in batch_df.toLocalIterator():
+        for row in _arrow_rows(batch_df.toArrow(), batch_df.schema):
             handler(row)
 
     return (

@@ -358,32 +358,34 @@ def test_streaming_state_survives_restart(spark, tmp_path):
                 assert g == pytest.approx(e, abs=1e-9), (t, f)
 
 
+def _ramp_ticks(n_symbols):
+    """Ticks of ``n_symbols`` symbols, each an overbought ramp (>= 1
+    signal per symbol), as a pandas frame of TICK_SCHEMA."""
+    import pandas as pd
+
+    prices = [100.0, 104.0, 108.0, 112.0, 116.0, 120.0]
+    return pd.DataFrame([
+        dict(symbol=t.symbol, timestamp=t.timestamp, price=t.price,
+             volume=t.volume, bid=None, ask=None)
+        for i in range(n_symbols) for t in make_ticks(f"S{i}", prices)
+    ])
+
+
 @pytest.mark.slow
 def test_foreachbatch_bridge_streams_all_partitions(spark, tmp_path):
-    """The foreachBatch bridge (VERDICT r03 item 7) iterates with
-    toLocalIterator — one partition resident at a time. Every signal
-    row must still reach the handler exactly once across a
-    multi-partition micro-batch."""
-    import pandas as pd
+    """The foreachBatch bridge collects a micro-batch as Arrow in one
+    job and builds Rows one record batch at a time. Every signal row
+    must reach the handler exactly once across a multi-partition
+    micro-batch."""
     from datafusion_functions_financial_spark.streaming.spark import (
         TICK_SCHEMA,
         start_signal_stream,
     )
 
-    # 8 symbols, each with an overbought ramp -> >= 1 signal per symbol,
-    # spread over several input partitions.
-    frames = []
-    for i in range(8):
-        prices = [100.0, 104.0, 108.0, 112.0, 116.0, 120.0]
-        ticks = make_ticks(f"S{i}", prices)
-        frames.append(pd.DataFrame([
-            dict(symbol=t.symbol, timestamp=t.timestamp, price=t.price,
-                 volume=t.volume, bid=None, ask=None) for t in ticks
-        ]))
-    pdf = pd.concat(frames, ignore_index=True)
+    # 8 symbols spread over several input partitions.
     src = tmp_path / "many_ticks"
-    spark.createDataFrame(pdf, schema=TICK_SCHEMA).repartition(8) \
-        .write.parquet(str(src))
+    spark.createDataFrame(_ramp_ticks(8), schema=TICK_SCHEMA) \
+        .repartition(8).write.parquet(str(src))
 
     fired = []
     stream = spark.readStream.schema(TICK_SCHEMA).parquet(str(src))
@@ -392,16 +394,72 @@ def test_foreachbatch_bridge_streams_all_partitions(spark, tmp_path):
         handler=lambda row: fired.append(
             (row["symbol"], row["timestamp"], row["signal_type"])),
     )
-    import time as _time
-    deadline = _time.time() + 90
-    while _time.time() < deadline:
-        if q.lastProgress and q.lastProgress["numInputRows"] == 0 and fired:
-            break
-        _time.sleep(1)
-    q.stop()
-    q.awaitTermination(30)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     # No duplicates (exactly-once within the batch) and full coverage
     # (every symbol's signals crossed the bridge).
     assert len(fired) == len(set(fired))
     assert {s for s, _, _ in fired} == {f"S{i}" for i in range(8)}
+
+
+@pytest.mark.slow
+def test_signal_stream_one_job_per_microbatch(spark, tmp_path):
+    """A micro-batch is one Spark job whatever the number of state
+    partitions, and the handler gets exactly the Rows ``collect()``
+    gives: values, field names, Python types, naive datetimes."""
+    from datafusion_functions_financial_spark.streaming.spark import (
+        TICK_SCHEMA,
+        detect_signal_exprs,
+        start_signal_stream,
+        streaming_indicators,
+    )
+
+    src = tmp_path / "ticks"
+    spark.createDataFrame(_ramp_ticks(16), schema=TICK_SCHEMA) \
+        .repartition(4).write.parquet(str(src))
+    # The same signals through a memory sink (applyInPandasWithState has
+    # no batch form), read back with collect().
+    q = (detect_signal_exprs(streaming_indicators(
+            spark.readStream.schema(TICK_SCHEMA).parquet(str(src)), 3))
+         .writeStream.format("memory").queryName("bridge_signals")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    want = spark.sql("SELECT * FROM bridge_signals").collect()
+
+    def run(partitions):
+        fired = []
+        stream = spark.readStream.schema(TICK_SCHEMA).parquet(str(src))
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        try:
+            q = start_signal_stream(
+                stream, 3, fired.append,
+                checkpointLocation=str(tmp_path / f"ckpt{partitions}"))
+            try:
+                q.processAllAvailable()
+                jobs = spark.sparkContext.statusTracker() \
+                    .getJobIdsForGroup(str(q.runId))
+            finally:
+                q.stop()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
+        return fired, len(jobs)
+
+    fired2, jobs2 = run(2)
+    fired8, jobs8 = run(8)
+    assert jobs8 == jobs2 >= 1
+
+    def key(r):
+        return (r.symbol, r.timestamp, r.signal_type)
+
+    want = sorted(want, key=key)
+    for fired in (fired2, fired8):
+        got = sorted(fired, key=key)
+        assert got == want
+        assert [r.__fields__ for r in got] == [r.__fields__ for r in want]
+        assert [[type(v) for v in r] for r in got] == \
+            [[type(v) for v in r] for r in want]
+        assert all(r.timestamp.tzinfo is None for r in got)
