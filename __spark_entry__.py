@@ -31,7 +31,8 @@ from datafusion_functions_financial_spark.plans.registry import (  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: all four reference indicators (SMA/EMA/RSI/MACD)
-    computed in a single applyInPandas pass over the events series."""
+    computed in one mapInPandas pass over the events series
+    (``indicators._map_series``)."""
     return all_queries()["ind_combined_events"](spark, "/root/testdata/sf0.001")
 
 

@@ -241,11 +241,5 @@ FROM ho
 
 QUERIES: dict = {
     "ind_candles_events": (_q_candles, _ORACLE_CANDLES),
-}
-
-# Registered past the gate window (the candles module itself sits
-# INSIDE the sealed r04 window — adding here would displace
-# resample_interp out of its gate slot).
-QUEUED_QUERIES: dict = {
     "ind_heikin_ashi_events": (_q_heikin_ashi, _ORACLE_HEIKIN_ASHI),
 }

@@ -1264,10 +1264,7 @@ FROM h JOIN c USING (hh)
 GROUP BY h.source
 """
 
-# Registered via the registry's r04-queue tail.
-QUEUED_QUERIES: dict = {
-    "dedup_rate_by_source_documents": (_q_dup_rate, _ORACLE_DUP_RATE),
-}
+QUERIES["dedup_rate_by_source_documents"] = (_q_dup_rate, _ORACLE_DUP_RATE)
 
 
 def _q_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -723,9 +723,5 @@ QUERIES: dict = {
     "micro_roll_spread_events": (_q_roll_spread, _ORACLE_ROLL_SPREAD),
     "micro_amihud_events": (_q_amihud, _ORACLE_AMIHUD),
     "micro_volume_poc_events": (_q_poc, _ORACLE_POC),
-}
-
-# Registered via the registry's r04-queue tail.
-QUEUED_QUERIES: dict = {
     "micro_twap_events": (_q_twap, _ORACLE_TWAP),
 }

@@ -1,12 +1,15 @@
-"""Gate-rotation regression guard (VERDICT r02 item 8).
+"""Gate-rotation regression guard.
 
 The driver's CORRECTNESS gate records rows for only the first
-``registry.GATE_WINDOW`` entries in registry iteration order, so the
-module order in ``registry._MODULES`` is a coverage decision. These
-tests keep that decision intentional:
+``registry.GATE_WINDOW`` entries in registry iteration order. The
+registry discovers every module's ``QUERIES`` and fronts the generated
+``plans/_window.py`` (``tools/gen_gated.py && tools/gen_window.py``), so
+the window is the coverage decision. These tests keep it intentional:
 
 - every query WITHOUT a prior driver CORRECTNESS row must sit inside
   the gate window (so it gets one this round);
+- the generated window and gated set match a regeneration;
+- QUERIES.md is exactly the census the registry renders;
 - every registered query has a DuckDB oracle (no silent rows-only
   entries creep in);
 - query/oracle registries stay in lockstep.
@@ -18,30 +21,24 @@ from datafusion_functions_financial_spark.plans import registry
 def test_every_ungated_query_inside_gate_window_or_queued():
     names = list(registry.all_queries())
     window = set(names[: registry.GATE_WINDOW])
-    pending = [n for n in names if n not in registry.PRIOR_GATED]
-    outside = [n for n in pending
-               if n not in window and n not in registry.NEXT_ROUND_QUEUE]
+    outside = [n for n in names
+               if n not in registry.PRIOR_GATED and n not in window]
     assert not outside, (
         "queries with no driver CORRECTNESS row fell outside the gate "
-        "window without being queued — reorder registry._MODULES or add "
-        f"to NEXT_ROUND_QUEUE: {outside}"
+        "window — run `tools/gen_gated.py && tools/gen_window.py`: "
+        f"{outside}"
     )
 
 
 def test_queue_names_exist_and_pending_fit_window():
-    names = set(registry.all_queries())
-    assert registry.NEXT_ROUND_QUEUE <= names, (
-        registry.NEXT_ROUND_QUEUE - names)
-    # 98/106 queries were driver-green by r03, so (unlike r02/r03) the
-    # window is mostly re-gate filler. The invariant that still matters:
-    # ungated queries must not outgrow the window — if this trips, move
-    # the overflow into NEXT_ROUND_QUEUE explicitly.
+    # Ungated queries must not outgrow the window: the generated window
+    # fronts every one of them, and a 51st would fall outside it.
     pending = [n for n in registry.all_queries()
-               if n not in registry.PRIOR_GATED
-               and n not in registry.NEXT_ROUND_QUEUE]
+               if n not in registry.PRIOR_GATED]
     assert len(pending) <= registry.GATE_WINDOW, (
         f"{len(pending)} ungated queries exceed the {registry.GATE_WINDOW}"
-        "-entry window — queue the overflow in NEXT_ROUND_QUEUE"
+        "-entry window — run `tools/gen_gated.py && tools/gen_window.py` "
+        "once the window's CORRECTNESS rows land"
     )
 
 
@@ -183,9 +180,8 @@ def test_every_query_has_an_oracle():
 
 
 def test_plan_rotation_check_mode():
-    # VERDICT r04 item 7: the rotation planner's --check mode runs as
-    # CI so a query landing outside both the window and the queue
-    # surfaces at commit time, not gate time.
+    # The rotation guard's --check mode runs as CI so an ungated query
+    # landing outside the window surfaces at commit time, not gate time.
     import importlib.util
     import pathlib
 
@@ -208,19 +204,25 @@ def test_gate_window_is_full():
 
 
 def test_queries_md_census_in_sync():
-    """VERDICT r05 item 6: the committed QUERIES.md header count must
-    match the live registry — regenerate with
-    ``python tools/gen_queries_md.py`` whenever a query is added."""
+    """The committed QUERIES.md must be byte-identical to the census the
+    live registry renders: every name, Spark function module/qualname and
+    oracle SQL. A lost, renamed or moved pair, or a changed oracle,
+    fails here — regenerate with ``python tools/gen_queries_md.py``
+    only when the change is intended."""
+    import importlib.util
     import pathlib
-    import re
 
-    md = pathlib.Path(__file__).parent.parent / "QUERIES.md"
-    header = md.read_text().splitlines()[0]
-    m = re.search(r"the (\d+) gate queries", header)
-    assert m, header
-    assert int(m.group(1)) == len(registry.all_queries()), (
-        f"QUERIES.md census {m.group(1)} != registry "
-        f"{len(registry.all_queries())}; run tools/gen_queries_md.py")
+    root = pathlib.Path(__file__).parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", root / "tools" / "gen_queries_md.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    rendered = mod.render().encode()
+    committed = (root / "QUERIES.md").read_bytes()
+    assert rendered == committed, (
+        f"QUERIES.md ({len(committed.splitlines())} lines) != the "
+        f"registry's census ({len(rendered.splitlines())} lines); run "
+        "tools/gen_queries_md.py")
 
 
 def test_gen_window_recovers_from_broken_window_file(tmp_path):

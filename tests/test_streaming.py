@@ -261,13 +261,10 @@ def test_signal_stream_end_to_end(spark, tmp_path):
                                           row["strength"])),
     )
     # availableNow semantics via stop-after-drain: process then stop.
-    import time as _time
-    deadline = _time.time() + 90
-    while _time.time() < deadline:
-        if q.lastProgress and q.lastProgress["numInputRows"] == 0 and fired:
-            break
-        _time.sleep(1)
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     q.awaitTermination(30)
 
     # Expected signals from the Python engine.

@@ -31,8 +31,8 @@ HEADER = '''\
 CORRECTNESS row (across every CORRECTNESS_r*.json in the repo root)
 is fully green (rows + schema + value-hash match, no error). The
 registry uses it as ``PRIOR_GATED``: queries NOT in this set must sit
-inside the gate window (or the explicit queue) so the driver records
-a row for them. Regenerate after each round's CORRECTNESS file lands.
+inside the gate window so the driver records a row for them.
+Regenerate after each round's CORRECTNESS file lands.
 
 ``SOURCE_FILES`` records which CORRECTNESS files existed at
 generation time (VERDICT r09 item 2): the rotation test fails only

@@ -13,7 +13,8 @@ from datafusion_functions_financial_spark.plans.registry import _collect
 _PKG = "datafusion_functions_financial_spark."
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's full text for the live registry."""
     pairs = _collect()
     lines = [
         f"# QUERIES — the {len(pairs)} gate queries and their DuckDB oracles",
@@ -31,9 +32,14 @@ def main() -> None:
             lines.append("(no SQL oracle: rows-only check)")
         else:
             lines += ["```sql", sql.strip(), "```"]
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    text = render()
     with open("QUERIES.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"QUERIES.md: {len(pairs)} queries")
+        f.write(text)
+    print(text.splitlines()[0])
 
 
 if __name__ == "__main__":

@@ -1,92 +1,49 @@
-"""Gate-rotation planner: turn a round's CORRECTNESS_r{N}.json into
-the next round's registry edits.
+"""Gate-rotation guard: every query without a green driver CORRECTNESS
+row must sit inside the gate window.
 
-Prints (a) the names to append to ``registry.PRIOR_GATED`` (this
-round's green rows), (b) any red rows (keep them gated next round so
-the fix re-gates), and (c) the still-ungated queries that must lead
-the next window (current R05_QUEUE members plus anything else without
-a prior CORRECTNESS row).
+The window itself is generated: ``plans/_gated.py`` and
+``plans/_window.py`` come from the CORRECTNESS files via
+``tools/gen_gated.py && tools/gen_window.py``.
 
 Usage:
-    python tools/plan_rotation.py CORRECTNESS_r04.json
     python tools/plan_rotation.py --check   # CI mode: exit 1 when any
-        # query lands outside both the gate window and the next-round
-        # queue (rotation mistake); no CORRECTNESS file needed.
+        # ungated query lands outside the gate window.
 """
 
 from __future__ import annotations
 
-import json
 import sys
 
 sys.path.insert(0, ".")
 
 
 def check() -> int:
-    """CI guard: every query must be prior-gated, inside the current
-    gate window, or explicitly queued for the next round. Returns the
-    number of violations (0 = clean)."""
+    """CI guard: every query must be prior-gated or inside the current
+    gate window. Returns the number of violations (0 = clean)."""
     from datafusion_functions_financial_spark.plans import registry
 
     names = list(registry.all_queries())
     window = set(names[: registry.GATE_WINDOW])
-    lost = [
-        n for n in names
-        if n not in registry.PRIOR_GATED
-        and n not in window
-        and n not in registry.NEXT_ROUND_QUEUE
-    ]
+    lost = [n for n in names
+            if n not in registry.PRIOR_GATED and n not in window]
     for n in lost:
-        print(f"ROTATION ERROR: {n} has no driver CORRECTNESS row, "
-              f"sits outside the first-{registry.GATE_WINDOW} window, "
-              "and is not in NEXT_ROUND_QUEUE")
+        print(f"ROTATION ERROR: {n} has no driver CORRECTNESS row and "
+              f"sits outside the first-{registry.GATE_WINDOW} window — "
+              "run tools/gen_gated.py && tools/gen_window.py")
     if not lost:
         ungated_in_window = sum(
             1 for n in names[: registry.GATE_WINDOW]
             if n not in registry.PRIOR_GATED)
         print(f"rotation OK: {len(names)} queries, "
-              f"{ungated_in_window} ungated in window, "
-              f"{len(registry.NEXT_ROUND_QUEUE)} queued")
+              f"{ungated_in_window} ungated in window")
     return len(lost)
 
 
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--check":
-        return 1 if check() else 0
-    path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_r04.json"
-    rows = json.load(open(path))
-
-    from datafusion_functions_financial_spark.plans import registry
-
-    green = sorted(
-        n for n, r in rows.items()
-        if r.get("rows_match") and r.get("schema_match")
-        and r.get("hash_match")
-    )
-    red = sorted(set(rows) - set(green))
-    gated_after = registry.PRIOR_GATED | set(green)
-    ungated = sorted(
-        n for n in registry.all_queries() if n not in gated_after
-    )
-
-    print(f"# {path}: {len(green)} green, {len(red)} red")
-    print("\n# Append to PRIOR_GATED:")
-    for n in green:
-        if n not in registry.PRIOR_GATED:
-            print(f'    "{n}",')
-    if red:
-        print("\n# RED rows — diagnose, fix, keep in next window:")
-        for n in red:
-            print(f"    {n}: {rows[n]}")
-    print(f"\n# Still ungated ({len(ungated)}) — must lead the next "
-          f"window (or sit in the next queue):")
-    for n in ungated:
-        print(f"    {n}")
-    win = registry.gate_window_names()
-    missing = [n for n in ungated if n not in win and n not in red]
-    print(f"\n# Of those, NOT in the current first-{registry.GATE_WINDOW}"
-          f" window: {len(missing)} (reorder _MODULES so they lead)")
-    return 0
+    if sys.argv[1:] != ["--check"]:
+        print(__doc__)
+        return 2
+    return 1 if check() else 0
 
 
 if __name__ == "__main__":
