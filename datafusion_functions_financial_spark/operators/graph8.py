@@ -9,11 +9,10 @@ pair diverges exactly on asymmetric trade networks; triangle counts
 membership criterion — the standard community-core filter.
 
 - ``hits_scores``: ``iters`` power iterations of weighted HITS with
-  L1 normalization after each half-step, starting uniform. Same
-  iterative-plan-on-Spark pattern as the gated PageRank: the edge
-  list is the small aggregated relation, each half-step is one
-  broadcast join + one aggregation; the driver loop only grows the
-  LOGICAL plan.
+  L1 normalization after each half-step, starting uniform. As in
+  the gated PageRank, the edge list is the small aggregated relation
+  (the same ``_trade_edges``); each half-step is one broadcast join +
+  one aggregation, and the driver loop only grows the LOGICAL plan.
 - ``truss_support_histogram``: every triangle is enumerated once
   from its lowest-(degree, id) corner (the gated triangle_count
   orientation, re-derived here for edge identity), charged to its
@@ -38,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.analytics6 import _trade_edges
 from ..plans.series import round_portable, round_portable_duck
 from ..sources.tables import load
 
@@ -168,26 +168,6 @@ def truss_support_histogram(edges: DataFrame, a_col: str,
 # Gate queries + mirrored oracles (nation trade network for HITS,
 # part co-purchase graph for the truss profile)
 # --------------------------------------------------------------------------
-
-
-def _trade_edges(spark: SparkSession, sf_dir: str):
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey")
-    s = load(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("s_nationkey").alias("src"),
-            F.col("c_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
 
 
 def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,9 +46,11 @@ def stationary_distribution(df: DataFrame, key: str = "user_id",
     chain = counts.withColumn("__p", F.expr(
         "CAST(__n AS DOUBLE) / CAST(sum(__n) OVER "
         "(PARTITION BY cur) AS DOUBLE)"))
-    states = chain.select(F.col("cur").alias("state")).distinct()
-    k = states.count()
-    v = states.withColumn("__v", F.lit(1.0 / k))
+    # Uniform start inside the plan (no build-time count job):
+    # 1 / k as the same correctly-rounded double as 1.0 / k.
+    v = chain.select(F.col("cur").alias("state")).distinct().withColumn(
+        "__v",
+        F.expr("CAST(1 AS DOUBLE) / CAST(count(*) OVER () AS DOUBLE)"))
     for _ in range(iters):
         v = (
             chain.join(F.broadcast(

@@ -25,8 +25,9 @@ Plan shapes at scale:
 - seasonal decompose: hash-aggregate to hourly bars (map-side
   combinable), then windows over the calendar-bounded bar series.
 - pagerank: the heavy work is the edge aggregation over lineitem
-  (one shuffle); the iterations run on the <= nations^2 edge list
-  with broadcast rank joins.
+  (one shuffle); the iterations run on the <= nations^2 edge list,
+  placed once in one partition: no exchange and no broadcast per step
+  (see ``pagerank_edges``).
 
 Beyond-reference scope (SURVEY.md extension); no counterpart in the
 reference's Rust surface.
@@ -270,15 +271,37 @@ PR_ITERS = 3
 
 def pagerank_edges(edges: DataFrame, nodes: DataFrame,
                    n_nodes: int, iters: int = PR_ITERS,
-                   d: float = PR_D,
-                   out_weight_shape: str = "aggregate") -> DataFrame:
+                   d: float = PR_D) -> DataFrame:
     """(node, pagerank): ``iters`` power iterations of PageRank over
     a weighted edge list ``(src, dst, w)``, starting uniform.
 
     The iterative-algorithm-on-Spark pattern: the edge list is the
-    small aggregated relation (<= nodes^2 rows), so each iteration is
-    a broadcast join rank->edges plus one aggregation on dst — the
-    driver loop only grows the LOGICAL plan; nothing is collected.
+    small aggregated relation (<= n_nodes^2 rows). It and the node
+    list are coalesced to ONE partition once, after the distributed
+    work that builds them, and every step runs in that one task: one
+    window plus one aggregate, with no broadcast and no exchange. The
+    driver loop only grows the LOGICAL plan (nothing is collected).
+
+    - The rank rows ride in a union with the edge rows, and one window
+      on ``src`` hands every edge its source's rank and out-weight
+      (``sum(w) OVER (PARTITION BY src)``). A join would need both
+      sides co-partitioned: over two single-partition inputs the
+      planner re-shuffles both whenever its size estimate passes
+      ``spark.sql.maxSinglePartitionBytes``, and the estimate of a
+      relation aggregated from a join is that join's product.
+    - Nodes with no in-edge still get a row: each rank row adds a zero
+      to its own node's sum, where a LEFT JOIN from the nodes would
+      re-shuffle both sides every step. Only nodes keep a rank: an
+      edge whose ``dst`` is NULL or not a node counts in its source's
+      out-weight, and its mass leaks.
+
+    Bound: a step sorts and aggregates <= n_nodes^2 + n_nodes rows in
+    one task, which beats a hash-partitioned step (one exchange and
+    one adaptive re-plan each) up to a few hundred nodes. On complete
+    synthetic graphs (3 iterations, local[4], AQE on) one partition
+    took 1.4 s at 362 nodes against 1.5-1.6 s hash-partitioned, but
+    2.4-2.7 s against 1.1-1.4 s at 512 nodes (SCALING.md, PageRank).
+
     Leak variant: mass lost to dangling nodes is not redistributed
     (identical formula on both engines, so parity is structural).
     Per-iteration incoming sums quantize to BIGINT (1e8) before
@@ -287,63 +310,47 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame,
     if d != PR_D:
         raise ValueError("damping is fixed at 85/100 (exact-ratio "
                          "double literals keep engine parity)")
-    # Out-weight shape (VERDICT r13 item 3). Both shapes produce the
-    # identical BIGINT total per src (integer sums are order-free):
-    #
-    # - "aggregate" (default): sum(w) per src via a map-side-combinable
-    #   aggregate, broadcast-joined back. Scale-safe under hub skew —
-    #   a src owning 10^9 edges partially aggregates on every map task
-    #   instead of sorting one giant window group on one reducer.
-    # - "window": SUM(w) OVER (PARTITION BY src), keeping the edge
-    #   relation ONE subplan shape. Tried in r13 for exchange reuse;
-    #   the r14 A/B measured no reuse firing at runtime (AQE-on plans
-    #   never show ReusedExchange on this setup — OPTIMIZATION_r13.md
-    #   empirical note) and no wall win, so the skew-safe aggregate is
-    #   the default again; the window variant stays for the A/B.
-    if out_weight_shape == "window":
-        e = edges.withColumn(
-            "__ow", F.expr("sum(w) OVER (PARTITION BY src)"))
-    elif out_weight_shape == "aggregate":
-        out_w = edges.groupBy("src").agg(F.sum("w").alias("__ow"))
-        e = edges.join(F.broadcast(out_w), "src")
-    else:
-        raise ValueError(f"unknown out_weight_shape {out_weight_shape!r}")
+    e = edges.select("src", "dst", "w").coalesce(1)
     # Damping constants as integer-ratio doubles (correctly-rounded
     # division of exact integers — identical on every engine), never
-    # Python float literals reprinted into SQL.
-    rank = nodes.select(
-        F.col("node"),
+    # Python float literals reprinted into SQL. The rank is keyed
+    # ``src``: the key it is matched on in the next step.
+    rank = nodes.coalesce(1).select(
+        F.col("node").alias("src"),
         F.expr(f"CAST(1 AS DOUBLE) / {n_nodes}").alias("pr"))
     base_sql = f"CAST(15 AS DOUBLE) / {100 * n_nodes}"
     for _ in range(iters):
-        contrib = (
-            e.join(F.broadcast(rank), e["src"] == rank["node"])
-            .select(
-                F.col("dst"),
-                F.expr(
-                    f"CAST(round(pr * (CAST(w AS DOUBLE) "
-                    f"/ CAST(__ow AS DOUBLE)) * {Q}) AS BIGINT)"
-                ).alias("__cq"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("__cq").alias("__in"))
+        both = e.unionByName(rank, allowMissingColumns=True).coalesce(1)
+        # An edge row contributes to its dst; a rank row (the one with
+        # a pr) contributes zero to its own node, so every node keeps a
+        # row in the sum, and ``__r`` marks the sums that are nodes.
+        contrib = both.select(
+            F.expr("CASE WHEN pr IS NULL THEN dst ELSE src END")
+            .alias("node"),
+            F.expr(
+                f"CASE WHEN pr IS NULL THEN "
+                f"CAST(round(max(pr) OVER (PARTITION BY src) "
+                f"* (CAST(w AS DOUBLE) "
+                f"/ CAST(sum(w) OVER (PARTITION BY src) AS DOUBLE)) "
+                f"* {Q}) AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+            ).alias("__cq"),
+            F.col("pr").isNotNull().alias("__r"),
         )
-        rank = nodes.join(
-            F.broadcast(contrib), nodes["node"] == contrib["dst"], "left"
-        ).select(
-            F.col("node"),
+        rank = contrib.groupBy(F.col("node").alias("src")).agg(
             F.expr(
                 f"{base_sql} + CAST(85 AS DOUBLE) / 100 "
-                f"* (CAST(coalesce(__in, 0) AS DOUBLE) / {float(Q)!r})"
+                f"* (CAST(sum(__cq) AS DOUBLE) / {float(Q)!r})"
             ).alias("pr"),
-        )
-    return rank.select("node", F.col("pr").alias("pagerank"))
+            F.max("__r").alias("__r"),
+        ).where("__r").drop("__r")
+    return rank.select(F.col("src").alias("node"),
+                       F.col("pr").alias("pagerank"))
 
 
-def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Which nations sit at the center of the trade network? Edges =
-    supplier-nation -> customer-nation, weighted by lineitem count;
-    the heavy distributed work is the edge aggregation."""
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, w): supplier-nation -> customer-nation trade edges,
+    weighted by lineitem count — the one distributed pass of the
+    nation-graph queries."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -351,8 +358,7 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey")
     s = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
+    return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
         .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
@@ -362,8 +368,15 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
+
+
+def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Which nations sit at the center of the trade network? Edges =
+    supplier-nation -> customer-nation, weighted by lineitem count;
+    the heavy distributed work is the edge aggregation."""
+    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nodes = n.select(F.col("n_nationkey").alias("node"))
-    pr = pagerank_edges(edges, nodes, n_nodes=25)
+    pr = pagerank_edges(_trade_edges(spark, sf_dir), nodes, n_nodes=25)
     return (
         pr.join(F.broadcast(n), pr["node"] == n["n_nationkey"])
         .select(

@@ -130,6 +130,41 @@ def validate_day_aggs(df: DataFrame, date_col: str = "date") -> ValidationReport
 US_DAY = 86_400_000_000
 
 
+def _gap_buckets(
+    df: DataFrame,
+    keys: list[str],
+    ts_us: F.Column,
+    tiebreak: list[str],
+    bucket_us: int,
+    *aggs: F.Column,
+) -> tuple[DataFrame, DataFrame, F.Column]:
+    """The bucketed decomposition of a per-key ordered gap scan, as
+    ``(rows, per_bucket, boundary)``:
+
+    - ``rows``: ``df`` with its time ``__us``, its time bucket
+      ``__bucket`` and ``__gap``, the gap to the previous row of its
+      (keys, bucket) window (NULL on a bucket's first row);
+    - ``per_bucket``: one row per (keys, bucket), aggregated on that
+      window's own exchange: ``aggs`` (over ``__gap`` and ``df``'s
+      columns) and the bucket's time range ``__mn``, ``__mx``;
+    - ``boundary``: a column of ``per_bucket``, the gap from the same
+      key's previous bucket's last row to this bucket's first row
+      (NULL on a key's first bucket).
+    """
+    # Integer DIV: epoch-ns/us magnitudes exceed double's exact-integer
+    # range, so float division would mis-bucket boundary rows.
+    rows = df.withColumn("__us", ts_us).withColumn(
+        "__bucket", F.expr(f"__us DIV {bucket_us}")
+    )
+    w_in = Window.partitionBy(*keys, "__bucket").orderBy("__us", *tiebreak)
+    rows = rows.withColumn("__gap", F.col("__us") - F.lag("__us").over(w_in))
+    per_bucket = rows.groupBy(*keys, "__bucket").agg(
+        *aggs, F.min("__us").alias("__mn"), F.max("__us").alias("__mx")
+    )
+    w_b = Window.partitionBy(*keys).orderBy("__bucket")
+    return rows, per_bucket, F.col("__mn") - F.lag("__mx").over(w_b)
+
+
 def keyed_time_gaps(
     df: DataFrame,
     keys: list[str],
@@ -140,41 +175,22 @@ def keyed_time_gaps(
     """All consecutive-row time gaps per key — (keys..., gap_us) —
     WITHOUT a global or whole-key single-task sort.
 
-    Lossless decomposition of the per-key ordered scan: rows bucket by
-    time (default 1 day); within-bucket gaps come from a window
-    hash-partitioned on (keys, bucket) — parallel across buckets even
-    for one giant key — and the bucket-boundary gaps are recovered from
-    per-bucket (min, max) aggregates via a window over the tiny
+    Lossless decomposition of the per-key ordered scan (``_gap_buckets``):
+    rows bucket by time (default 1 day); within-bucket gaps come from a
+    window hash-partitioned on (keys, bucket) — parallel across buckets
+    even for one giant key — and the bucket-boundary gaps are recovered
+    from per-bucket (min, max) aggregates via a window over the tiny
     aggregated table (one row per key-bucket). The union equals the
     gap multiset of ``lag() OVER (PARTITION BY keys ORDER BY ts)``
     exactly: bucketing is monotonic in ts, so bucket-local adjacency
     plus boundary adjacency is global adjacency.
     """
-    # Integer DIV: epoch-ns/us magnitudes exceed double's exact-integer
-    # range, so float division would mis-bucket boundary rows.
-    d = df.select(*keys, *tiebreak, ts_us.alias("__us")).withColumn(
-        "__bucket", F.expr(f"__us DIV {bucket_us}")
-    )
-    w_in = Window.partitionBy(*keys, "__bucket").orderBy("__us", *tiebreak)
-    within = (
-        d.select(
-            *keys,
-            (F.col("__us") - F.lag("__us").over(w_in)).alias("gap_us"),
-        )
-        .filter(F.col("gap_us").isNotNull())
-    )
-    seg = d.groupBy(*keys, "__bucket").agg(
-        F.min("__us").alias("__mn"), F.max("__us").alias("__mx")
-    )
-    w_b = Window.partitionBy(*keys).orderBy("__bucket")
-    boundary = (
-        seg.select(
-            *keys,
-            (F.col("__mn") - F.lag("__mx").over(w_b)).alias("gap_us"),
-        )
-        .filter(F.col("gap_us").isNotNull())
-    )
-    return within.unionByName(boundary)
+    rows, per_bucket, boundary = _gap_buckets(
+        df, keys, ts_us, tiebreak, bucket_us)
+    within = rows.select(*keys, F.col("__gap").alias("gap_us"))
+    at_boundary = per_bucket.select(*keys, boundary.alias("gap_us"))
+    return within.unionByName(at_boundary).filter(
+        F.col("gap_us").isNotNull())
 
 
 def validate_minute_aggs_partitioned(
@@ -195,26 +211,13 @@ def validate_minute_aggs_partitioned(
     that window's exchange counts them together with the rows, the
     value checks and the OHLC checks and keeps the bucket's (min, max)
     time. The bucket-boundary gaps are a lag over that small relation
-    (the decomposition of ``keyed_time_gaps``)."""
+    (``_gap_buckets``, the decomposition of ``keyed_time_gaps``)."""
     thr = gap_ns // 1000
-    # Integer DIV, as in keyed_time_gaps: epoch-ns magnitudes exceed
-    # double's exact-integer range.
-    d = df.withColumn("__us", F.expr(f"{ts_col} DIV 1000")).withColumn(
-        "__bucket", F.expr(f"__us DIV {bucket_us}")
+    _, per_bucket, boundary_gap = _gap_buckets(
+        df, keys, F.expr(f"{ts_col} DIV 1000"), tiebreak, bucket_us,
+        *_minute_checks(),
+        _count_if(F.col("__gap") > thr).alias("gaps"),
     )
-    w_in = Window.partitionBy(*keys, "__bucket").orderBy("__us", *tiebreak)
-    per_bucket = (
-        d.withColumn("__gap", F.col("__us") - F.lag("__us").over(w_in))
-        .groupBy(*keys, "__bucket")
-        .agg(
-            *_minute_checks(),
-            _count_if(F.col("__gap") > thr).alias("gaps"),
-            F.min("__us").alias("__mn"),
-            F.max("__us").alias("__mx"),
-        )
-    )
-    w_b = Window.partitionBy(*keys).orderBy("__bucket")
-    boundary_gap = F.col("__mn") - F.lag("__mx").over(w_b)
     # A sum over no rows is NULL: an empty input reports zeros.
     row = per_bucket.select(
         "total", "negative_values", "logic_errors",
@@ -316,20 +319,41 @@ def _q_validate_events_gaps_keyed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     # Per-user keyed gap validation through the bucketed lossless
-    # decomposition (keyed_time_gaps) — the scale-safe variant of
-    # _q_validate_events_gaps. The oracle declares the equivalent
-    # per-key window; results match because the decomposition is exact.
-    df = load(spark, sf_dir, "events")
-    gaps = keyed_time_gaps(
-        df, ["user_id"], F.expr("ts DIV 1000"), ["event_id"]
+    # decomposition of keyed_time_gaps (_gap_buckets), the scale-safe
+    # variant of _q_validate_events_gaps, with the reductions folded in
+    # as validate_minute_aggs_partitioned does: the within-bucket gaps
+    # reduce per (user, bucket) on their window's own exchange, and the
+    # bucket-boundary gap is a lag over that small relation. The oracle
+    # declares the equivalent per-key window; results match because the
+    # decomposition is exact.
+    thr = 10 * US_MINUTE
+    _, per_bucket, boundary = _gap_buckets(
+        load(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
+        ["user_id"], F.expr("ts DIV 1000"), ["event_id"], US_DAY,
+        F.count("__gap").alias("n"),
+        _count_if(F.col("__gap") > thr).alias("over"),
+        F.max("__gap").alias("mx_gap"),
     )
-    return gaps.agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.count(F.when(F.col("gap_us") > 10 * US_MINUTE, 1)).alias(
-            "gap_count"
-        ),
-        F.max("gap_us").alias("max_gap_us"),
-        F.countDistinct(*["user_id"]).alias("n_keys"),
+    has_gap = (F.col("n") > 0) | boundary.isNotNull()
+    # A user counts once, on its first bucket that holds a gap: the
+    # running max over the earlier buckets of the boundary lag's window.
+    seen = F.max(has_gap.cast("int")).over(
+        Window.partitionBy("user_id").orderBy("__bucket")
+        .rowsBetween(Window.unboundedPreceding, -1))
+    flagged = per_bucket.select(
+        (F.col("n") + boundary.isNotNull().cast("bigint")).alias("n"),
+        (F.col("over") + F.when(boundary > thr, 1).otherwise(0))
+        .alias("over"),
+        F.greatest("mx_gap", boundary).alias("mx_gap"),
+        (F.col("user_id").isNotNull() & has_gap
+         & (F.coalesce(seen, F.lit(0)) == 0)).alias("first"),
+    )
+    # A sum over no rows is NULL: an empty input reports zeros.
+    return flagged.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_gaps"),
+        F.coalesce(F.sum("over"), F.lit(0)).alias("gap_count"),
+        F.max("mx_gap").alias("max_gap_us"),
+        _count_if(F.col("first")).alias("n_keys"),
     )
 
 

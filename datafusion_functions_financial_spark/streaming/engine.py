@@ -160,8 +160,14 @@ class StreamingIndicators:
             else self.avg_gain == 0.0
         )
         if reseed:
-            self.avg_gain = sum(self.gains) / n
-            self.avg_loss = sum(self.losses) / n
+            # Left fold, as kernels.rsi_kernel and _sma: the builtin
+            # sum compensates floats on Python 3.12+.
+            sg = sl = 0.0
+            for g, lo in zip(self.gains, self.losses):
+                sg += g
+                sl += lo
+            self.avg_gain = sg / n
+            self.avg_loss = sl / n
             self.rsi_seeded = True
         else:
             alpha = 1.0 / n

@@ -46,6 +46,19 @@ def test_stationary_sums_to_one(spark, sf_dir):
         1.0, abs=1e-4)
 
 
+def test_stationary_build_fires_no_job(spark, sf_dir):
+    # The uniform start 1/k is a window over the states inside the
+    # plan, not a count() while the query is built.
+    from datafusion_functions_financial_spark.plans.registry import (
+        all_queries,
+    )
+    from tests.test_r06_ops import _jobs
+    q = all_queries()["q_markov_stationary_events"]
+    q(spark, sf_dir)  # the session's first load of a table reads its schema
+    _, jobs = _jobs(spark, "markov-build", lambda: q(spark, sf_dir))
+    assert jobs == 0
+
+
 def _daily_events_df(spark, values, key="a"):
     return spark.createDataFrame(
         [(key, i * US_DAY + 1, float(v)) for i, v in enumerate(values)],

@@ -227,8 +227,87 @@ def test_new_query_no_cartesian(spark, sf_dir, name):
     assert "CartesianProduct" not in plan, plan
 
 
+def _plan_nodes(plan: str, name: str) -> int:
+    """Plan nodes of kind ``name``; a ``ReusedExchange`` line names the
+    exchange it reuses but runs none, so it is not counted."""
+    return sum(1 for line in plan.splitlines()
+               if line.lstrip(" :+-").startswith(name + " "))
+
+
+def _pagerank(spark, sf_dir, iters=3):
+    from datafusion_functions_financial_spark.plans.analytics6 import (
+        _trade_edges, pagerank_edges,
+    )
+    from datafusion_functions_financial_spark.sources.tables import load
+    nodes = load(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("node"))
+    return pagerank_edges(_trade_edges(spark, sf_dir), nodes, n_nodes=25,
+                          iters=iters)
+
+
+def _pagerank_plan(spark, sf_dir, iters):
+    return _pagerank(spark, sf_dir, iters)._jdf.queryExecution(
+    ).executedPlan().toString()
+
+
 def test_pagerank_iterations_broadcast(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "graph_pagerank_nations")
-    # rank + out-weight joins per iteration are broadcasts, and the
-    # one big shuffle joins lineitem-orders.
-    assert plan.count("BroadcastHashJoin") >= 4, plan
+    # The 25-node iterate runs in one partition: its steps add no
+    # broadcast and no shuffle, so both counts are those of the edge
+    # aggregation alone, whatever the number of iterations.
+    one, three = (_pagerank_plan(spark, sf_dir, k) for k in (1, 3))
+    for kind in ("BroadcastExchange", "BroadcastHashJoin", "Exchange"):
+        assert _plan_nodes(three, kind) == _plan_nodes(one, kind), three
+
+
+def _jobs(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it fired under
+    the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_pagerank_jobs_with_aqe(spark, sf_dir):
+    # The production config (AQE on): building fires no job, and the
+    # run pays the edge aggregation's broadcasts and shuffle, the nation
+    # name broadcast and the result stage, none per iteration.
+    from datafusion_functions_financial_spark.plans.registry import (
+        all_queries,
+    )
+    q = all_queries()["graph_pagerank_nations"]
+    q(spark, sf_dir)  # the session's first load of a table reads its schema
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df, built = _jobs(spark, "pagerank-build", lambda: q(spark, sf_dir))
+        _, ran = _jobs(spark, "pagerank-exec", lambda: df.write.format(
+            "noop").mode("overwrite").save())
+    finally:
+        spark.conf.set(key, before)
+    assert built == 0
+    assert ran <= 6
+
+
+def test_pagerank_edges_outside_nodes_leak(spark):
+    # Edges with a NULL dst or a dst outside the nodes count in their
+    # source's out-weight, and their mass leaks: one step over node 0
+    # -> {1, NULL, 99} (w 1 each) hands node 1 a third of node 0's
+    # rank, and only the nodes get a rank row.
+    from datafusion_functions_financial_spark.plans.analytics6 import (
+        Q, pagerank_edges,
+    )
+    nodes = spark.createDataFrame([(0,), (1,)], "node bigint")
+    edges = spark.createDataFrame([(0, 1, 1), (0, None, 1), (0, 99, 1)],
+                                  "src bigint, dst bigint, w bigint")
+    got = {r.node: r.pagerank
+           for r in pagerank_edges(edges, nodes, 2, iters=1).collect()}
+    base = 15.0 / 200
+    assert got == {
+        0: base,
+        1: base + 85.0 / 100 * (round(0.5 * (1.0 / 3.0) * Q) / float(Q)),
+    }

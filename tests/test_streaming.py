@@ -73,6 +73,25 @@ def test_streaming_rsi_batch_mode_matches_batch_kernel_prefix():
             assert got[i] == pytest.approx(exp[i], abs=1e-12)
 
 
+
+def test_streaming_rsi_seed_is_left_fold(monkeypatch):
+    # The seed average is the sequential left fold of the gains, as in
+    # rsi_kernel and the reference, even where a compensated sum (the
+    # builtin on Python 3.12+) differs in the last bit: here the gains
+    # are 1, 0, 1e-16, 0, 1e-16, whose left fold is exactly 1.0.
+    from datafusion_functions_financial_spark.streaming import engine
+
+    monkeypatch.setattr(engine, "sum", math.fsum, raising=False)
+    prices = [0.0, 1.0, 0.0, 1e-16, 0.0, 1e-16]
+    eng = StreamingIndicators("X", 5, seed_mode="batch")
+    for t in make_ticks("X", prices):
+        eng.update(t)
+    fold = 0.0
+    for g in eng.gains:
+        fold += g
+    assert math.fsum(eng.gains) != fold
+    assert eng.avg_gain == fold / 5
+
 def test_streaming_volume_ratio():
     eng = StreamingIndicators("X", 2)
     ticks = make_ticks("X", [1.0, 1.0, 1.0], volumes=[100, 100, 400])
