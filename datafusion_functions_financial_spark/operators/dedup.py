@@ -873,14 +873,21 @@ def simhash_candidate_count(df: DataFrame, text_col: str = "text",
         f"'k', simhash & {mask}L)"
         for t, (sign, mask) in enumerate(terms)
     )
-    return (
+    return _candidate_sum(
         s.selectExpr(f"explode(array({structs})) AS tk")
         .groupBy("tk.t", "tk.sg", "tk.k")
-        .agg(F.count(F.lit(1)).alias("__m"))
-        .agg(F.expr(
-            "coalesce(CAST(sum(sg * (__m * (__m - 1) DIV 2)) AS BIGINT), "
-            "0L) AS n_candidates"))
-    )
+        .agg(F.count(F.lit(1)).alias("__m")))
+
+
+def _candidate_sum(groups: DataFrame) -> DataFrame:
+    """(n_candidates): ``sum(sg * C(__m, 2))`` over the signed bucket
+    sizes. ``__m * (__m - 1)`` leaves BIGINT at ``__m`` > 3.04e9, so the
+    terms are summed in DECIMAL(38,0) and halved once (each is even);
+    only the total must fit in BIGINT, and the ANSI cast raises when it
+    does not (a decimal ``DIV`` would wrap silently)."""
+    return groups.agg(F.expr(
+        "coalesce(CAST(sum(sg * CAST(__m AS DECIMAL(38,0)) * (__m - 1)) "
+        "/ 2 AS BIGINT), 0L) AS n_candidates"))
 
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",

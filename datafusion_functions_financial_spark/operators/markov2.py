@@ -1,5 +1,5 @@
 """Markov chain analytics #2: the stationary distribution of the
-event-type transition chain via unrolled power iteration — "where
+event-type transition chain via power iteration — "where
 does the session process spend its time in the long run", the
 equilibrium view that complements the one-step transition matrix
 (plans/sequences.markov_transitions) and its entropy.
@@ -12,16 +12,22 @@ aggregation order. The empirical occupancy (share of observations in
 each state) rides along for a convergence sanity column.
 
 Plan shape at scale: the chain relation is states² rows (bounded by
-the category cardinality, never the data); each of the ITERS steps
-is one broadcast join + one tiny aggregate. Only the first transition
-count ever touches the data.
+the category cardinality, never the data). It is coalesced to one
+partition once, and all ITERS steps run there as one numpy fold
+(``operators.powerfold``), so the plan and its Spark jobs are the same
+for any ``iters``. Only the first transition count ever touches the
+data.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .powerfold import Graph, power_fold
 from ..plans.series import round_portable, round_portable_duck
 from ..plans.sequences import _pairs
 from ..sources.tables import load
@@ -43,25 +49,16 @@ def stationary_distribution(df: DataFrame, key: str = "user_id",
     pairs = _pairs(df, key, cat, order or ["ts", "event_id"])
     counts = pairs.groupBy("cur", "nxt").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"))
-    chain = counts.withColumn("__p", F.expr(
-        "CAST(__n AS DOUBLE) / CAST(sum(__n) OVER "
-        "(PARTITION BY cur) AS DOUBLE)"))
-    # Uniform start inside the plan (no build-time count job):
-    # 1 / k as the same correctly-rounded double as 1.0 / k.
-    v = chain.select(F.col("cur").alias("state")).distinct().withColumn(
-        "__v",
-        F.expr("CAST(1 AS DOUBLE) / CAST(count(*) OVER () AS DOUBLE)"))
-    for _ in range(iters):
-        v = (
-            chain.join(F.broadcast(
-                v.select(F.col("state").alias("cur"), "__v")), "cur")
-            .groupBy(F.col("nxt").alias("state"))
-            .agg(F.sum(F.expr(
-                f"CAST(round(__v * __p * {QT}) AS BIGINT)"))
-                .alias("__vq"))
-            .select("state", F.expr(
-                f"CAST(__vq AS DOUBLE) / {QTF!r}").alias("__v"))
-        )
+    # The states are the distinct ``cur`` (NULL included: it counts in
+    # the uniform start 1/k); a NULL ``cur`` never equi-joins, so its
+    # transitions are not edges.
+    v = power_fold(
+        counts.where(F.col("cur").isNotNull()).select(
+            F.col("cur").alias("src"), F.col("nxt").alias("dst"),
+            F.col("__n").alias("w")),
+        counts.select(F.col("cur").alias("node")),
+        functools.partial(_stationary_fold, iters=iters),
+    ).select(F.col("node").alias("state"), F.col("v").alias("__v"))
     occ = (
         pairs.groupBy(F.col("cur").alias("state"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
@@ -77,6 +74,18 @@ def stationary_distribution(df: DataFrame, key: str = "user_id",
             ).alias("p_empirical"),
         )
     )
+
+
+def _stationary_fold(g: Graph, iters: int):
+    """Uniform start over the states; each step keeps the states that
+    an edge from a kept state reaches (the SQL step's inner join) at
+    ``sum(round(v * p * QT)) / QT``."""
+    live = np.ones(g.n, bool)
+    v = np.full(g.n, 1.0 / g.n)
+    for _ in range(iters):
+        sums, live = g.push(v, QT, live)
+        v = sums.astype(np.float64) / QTF
+    return live, v
 
 
 def _q_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:

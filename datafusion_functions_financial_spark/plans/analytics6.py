@@ -1,8 +1,8 @@
 """Frontier/structure analytics: 2-D skyline (Pareto frontier),
-equi-depth histograms, seasonal decomposition, and an unrolled
-PageRank over the nation trade graph — the "shape of the data"
-reports that need more than one aggregation pass but still compile to
-pure Catalyst plans.
+equi-depth histograms, seasonal decomposition, and PageRank over the
+nation trade graph — the "shape of the data" reports that need more
+than one aggregation pass. All but PageRank's in-task power fold
+compile to pure Catalyst plans.
 
 Engine-exact by construction (the SCALING.md determinism rules):
 - Every cross-row float sum quantizes to BIGINT first (1e8 linear,
@@ -11,8 +11,8 @@ Engine-exact by construction (the SCALING.md determinism rules):
 - Skyline and the equi-depth bins are comparison/rank-only (no float
   arithmetic at all).
 - PageRank iterations quantize each node's incoming contribution sum
-  per iteration, so all three unrolled iterations stay bitwise
-  identical across engines and partitionings.
+  per iteration, so all three iterations stay bitwise identical
+  across engines and partitionings.
 
 Plan shapes at scale:
 - skyline: per-day maxima first (hash aggregate — the only pass over
@@ -26,8 +26,9 @@ Plan shapes at scale:
   combinable), then windows over the calendar-bounded bar series.
 - pagerank: the heavy work is the edge aggregation over lineitem
   (one shuffle); the iterations run on the <= nations^2 edge list,
-  placed once in one partition: no exchange and no broadcast per step
-  (see ``pagerank_edges``).
+  placed once in one partition, as one numpy fold in that task: no
+  exchange, no broadcast and no plan operator per step (see
+  ``pagerank_edges``).
 
 Beyond-reference scope (SURVEY.md extension); no counterpart in the
 reference's Rust surface.
@@ -35,9 +36,13 @@ reference's Rust surface.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.powerfold import Graph, power_fold
 from ..sources.tables import load
 from .series import round_portable, round_portable_duck
 
@@ -262,7 +267,7 @@ GROUP BY 1
 
 
 # ==========================================================================
-# PageRank over the nation trade graph (3 unrolled iterations)
+# PageRank over the nation trade graph (3 power iterations)
 # ==========================================================================
 
 PR_D = 0.85
@@ -275,32 +280,28 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame,
     """(node, pagerank): ``iters`` power iterations of PageRank over
     a weighted edge list ``(src, dst, w)``, starting uniform.
 
-    The iterative-algorithm-on-Spark pattern: the edge list is the
-    small aggregated relation (<= n_nodes^2 rows). It and the node
-    list are coalesced to ONE partition once, after the distributed
-    work that builds them, and every step runs in that one task: one
-    window plus one aggregate, with no broadcast and no exchange. The
-    driver loop only grows the LOGICAL plan (nothing is collected).
+    The edge list is the small aggregated relation (<= n_nodes^2 rows).
+    It and the node list are coalesced to ONE partition once, after the
+    distributed work that builds them, and all ``iters`` steps run in
+    that one task as a numpy fold (``operators.powerfold``): no
+    broadcast, no exchange and no plan operator per step, so the plan,
+    its generated classes and its build time are the same for 1 step or
+    100, and building it fires no job.
 
-    - The rank rows ride in a union with the edge rows, and one window
-      on ``src`` hands every edge its source's rank and out-weight
-      (``sum(w) OVER (PARTITION BY src)``). A join would need both
-      sides co-partitioned: over two single-partition inputs the
-      planner re-shuffles both whenever its size estimate passes
-      ``spark.sql.maxSinglePartitionBytes``, and the estimate of a
-      relation aggregated from a join is that join's product.
-    - Nodes with no in-edge still get a row: each rank row adds a zero
-      to its own node's sum, where a LEFT JOIN from the nodes would
-      re-shuffle both sides every step. Only nodes keep a rank: an
-      edge whose ``dst`` is NULL or not a node counts in its source's
-      out-weight, and its mass leaks.
+    Each step is the SQL step (``_pr_iter_sql``) in the same order:
+    the out-weight ``ow = sum(w)`` per ``src``; the contribution
+    ``round(pr * (w / ow) * Q)`` as BIGINT; its per-``dst`` sum, zero
+    for a node with no in-edge; and ``15/(100 n) + 85/100 * (sum / Q)``.
+    Edge contract: an edge whose ``dst`` is NULL or not a node counts in
+    its source's out-weight, and its mass leaks; an edge whose ``src``
+    is not a node, or whose ``w`` is NULL, contributes nothing; only
+    nodes get a rank. A source node whose non-NULL weights sum to 0
+    raises ``DIVIDE_BY_ZERO``, as the ANSI division does.
 
-    Bound: a step sorts and aggregates <= n_nodes^2 + n_nodes rows in
-    one task, which beats a hash-partitioned step (one exchange and
-    one adaptive re-plan each) up to a few hundred nodes. On complete
-    synthetic graphs (3 iterations, local[4], AQE on) one partition
-    took 1.4 s at 362 nodes against 1.5-1.6 s hash-partitioned, but
-    2.4-2.7 s against 1.1-1.4 s at 512 nodes (SCALING.md, PageRank).
+    Bound: the fold holds <= n_nodes^2 + n_nodes rows in one task's
+    numpy arrays, the same one-partition bound as the SQL iterate had
+    (SCALING.md, PageRank): the task wins up to a few hundred nodes,
+    and larger graphs want a hash-partitioned step.
 
     Leak variant: mass lost to dangling nodes is not redistributed
     (identical formula on both engines, so parity is structural).
@@ -310,41 +311,20 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame,
     if d != PR_D:
         raise ValueError("damping is fixed at 85/100 (exact-ratio "
                          "double literals keep engine parity)")
-    e = edges.select("src", "dst", "w").coalesce(1)
-    # Damping constants as integer-ratio doubles (correctly-rounded
-    # division of exact integers — identical on every engine), never
-    # Python float literals reprinted into SQL. The rank is keyed
-    # ``src``: the key it is matched on in the next step.
-    rank = nodes.coalesce(1).select(
-        F.col("node").alias("src"),
-        F.expr(f"CAST(1 AS DOUBLE) / {n_nodes}").alias("pr"))
-    base_sql = f"CAST(15 AS DOUBLE) / {100 * n_nodes}"
+    fold = functools.partial(_pagerank_fold, n_nodes=n_nodes, iters=iters)
+    return power_fold(edges, nodes, fold).select(
+        "node", F.col("v").alias("pagerank"))
+
+
+def _pagerank_fold(g: Graph, n_nodes: int, iters: int):
+    # The damping constants are the SQL's integer-ratio doubles
+    # (correctly-rounded division of exact integers).
+    base = 15.0 / (100 * n_nodes)
+    pr = np.full(g.n, 1.0 / n_nodes)
     for _ in range(iters):
-        both = e.unionByName(rank, allowMissingColumns=True).coalesce(1)
-        # An edge row contributes to its dst; a rank row (the one with
-        # a pr) contributes zero to its own node, so every node keeps a
-        # row in the sum, and ``__r`` marks the sums that are nodes.
-        contrib = both.select(
-            F.expr("CASE WHEN pr IS NULL THEN dst ELSE src END")
-            .alias("node"),
-            F.expr(
-                f"CASE WHEN pr IS NULL THEN "
-                f"CAST(round(max(pr) OVER (PARTITION BY src) "
-                f"* (CAST(w AS DOUBLE) "
-                f"/ CAST(sum(w) OVER (PARTITION BY src) AS DOUBLE)) "
-                f"* {Q}) AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-            ).alias("__cq"),
-            F.col("pr").isNotNull().alias("__r"),
-        )
-        rank = contrib.groupBy(F.col("node").alias("src")).agg(
-            F.expr(
-                f"{base_sql} + CAST(85 AS DOUBLE) / 100 "
-                f"* (CAST(sum(__cq) AS DOUBLE) / {float(Q)!r})"
-            ).alias("pr"),
-            F.max("__r").alias("__r"),
-        ).where("__r").drop("__r")
-    return rank.select(F.col("src").alias("node"),
-                       F.col("pr").alias("pagerank"))
+        sums, _ = g.push(pr, Q)
+        pr = base + 85.0 / 100 * (sums.astype(np.float64) / float(Q))
+    return np.ones(g.n, bool), pr
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

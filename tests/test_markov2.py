@@ -59,6 +59,24 @@ def test_stationary_build_fires_no_job(spark, sf_dir):
     assert jobs == 0
 
 
+def test_stationary_jobs_independent_of_iters(spark, sf_dir):
+    # All power steps run in one task's fold: 1 step and 4 steps run
+    # the same Spark jobs.
+    from datafusion_functions_financial_spark.operators.markov2 import (
+        stationary_distribution,
+    )
+    from datafusion_functions_financial_spark.sources.tables import load
+    from tests.test_r06_ops import _jobs
+    ev = load(spark, sf_dir, "events")
+    ran = []
+    for iters in (1, 4):
+        df = stationary_distribution(ev, iters=iters)
+        _, jobs = _jobs(spark, f"markov-exec-{iters}", lambda: df.write.format(
+            "noop").mode("overwrite").save())
+        ran.append(jobs)
+    assert ran[0] == ran[1], ran
+
+
 def _daily_events_df(spark, values, key="a"):
     return spark.createDataFrame(
         [(key, i * US_DAY + 1, float(v)) for i, v in enumerate(values)],

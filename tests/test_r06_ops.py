@@ -251,12 +251,13 @@ def _pagerank_plan(spark, sf_dir, iters):
 
 
 def test_pagerank_iterations_broadcast(spark, sf_dir):
-    # The 25-node iterate runs in one partition: its steps add no
-    # broadcast and no shuffle, so both counts are those of the edge
-    # aggregation alone, whatever the number of iterations.
-    one, three = (_pagerank_plan(spark, sf_dir, k) for k in (1, 3))
+    # The 25-node iterate runs in one task's fold: its steps add no
+    # broadcast, no shuffle and no plan operator at all, so the executed
+    # plan is the same for any number of iterations.
+    one, three, ten = (_pagerank_plan(spark, sf_dir, k) for k in (1, 3, 10))
     for kind in ("BroadcastExchange", "BroadcastHashJoin", "Exchange"):
         assert _plan_nodes(three, kind) == _plan_nodes(one, kind), three
+    assert len(ten.splitlines()) == len(one.splitlines()), ten
 
 
 def _jobs(spark, group, fn):
@@ -311,3 +312,68 @@ def test_pagerank_edges_outside_nodes_leak(spark):
         0: base,
         1: base + 85.0 / 100 * (round(0.5 * (1.0 / 3.0) * Q) / float(Q)),
     }
+
+
+def _pagerank_duck(rows, n, iters):
+    """The SQL step (``_pr_iter_sql``) in DuckDB over edge ``rows``
+    and nodes ``0..n-1``: {node: pagerank}."""
+    import duckdb
+    from datafusion_functions_financial_spark.plans.analytics6 import (
+        _pr_iter_sql,
+    )
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE edges (src BIGINT, dst BIGINT, w BIGINT)")
+        con.executemany("INSERT INTO edges VALUES (?, ?, ?)", rows)
+        steps = ",\n".join(_pr_iter_sql(f"rank{i}", i + 1, n)
+                           for i in range(iters))
+        sql = f"""WITH e AS (
+          SELECT src, dst, w,
+                 CAST(sum(w) OVER (PARTITION BY src) AS BIGINT) AS ow
+          FROM edges
+        ), nodes AS (SELECT range AS node FROM range({n})
+        ), rank0 AS (
+          SELECT node, CAST(1 AS DOUBLE) / {n} AS pr FROM nodes
+        ), {steps}
+        SELECT node, pr FROM rank{iters}"""
+        return dict(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_pagerank_fold_matches_sql_steps(spark, seed):
+    # Seeded graphs with every edge case of the contract: NULL and
+    # non-node dst (mass leaks), non-node src and NULL w (no
+    # contribution), nodes without in-edges; bit-equal to the SQL steps.
+    from datafusion_functions_financial_spark.plans.analytics6 import (
+        pagerank_edges,
+    )
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(4, 30))
+    rows = []
+    for _ in range(int(rng.integers(n, n * n))):
+        dst = int(rng.integers(0, n + 3))
+        rows.append((int(rng.integers(0, n + 3)),
+                     None if rng.random() < 0.1 else dst,
+                     None if rng.random() < 0.1 else int(
+                         rng.integers(1, 1000))))
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint, w bigint")
+    nodes = spark.range(n).select(F.col("id").alias("node"))
+    for iters in (1, 3, 10):
+        got = {r.node: r.pagerank for r in
+               pagerank_edges(edges, nodes, n, iters=iters).collect()}
+        assert got == _pagerank_duck(rows, n, iters), (seed, iters)
+
+
+def test_pagerank_zero_out_weight_raises(spark):
+    # A source node whose weights sum to 0 divides by zero: the ANSI
+    # DIVIDE_BY_ZERO of the SQL step, never a silent NaN rank.
+    from datafusion_functions_financial_spark.plans.analytics6 import (
+        pagerank_edges,
+    )
+    nodes = spark.createDataFrame([(0,), (1,)], "node bigint")
+    edges = spark.createDataFrame([(0, 1, 0), (1, 0, 1)],
+                                  "src bigint, dst bigint, w bigint")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        pagerank_edges(edges, nodes, 2, iters=1).collect()

@@ -50,3 +50,17 @@ def test_count_is_zero_on_empty_input(spark):
         df).collect()[0]["n_candidates"]
     assert counted == 0
     assert dd.simhash_candidates(df).count() == 0
+
+
+def test_candidate_sum_past_bigint_pair_term(spark):
+    # One bucket of 3.1e9 rows: __m * (__m - 1) = 9.6e18 leaves BIGINT
+    # (ANSI raised ARITHMETIC_OVERFLOW), while C(__m, 2) and the total
+    # fit. A total past BIGINT still raises; it never wraps.
+    m = 3_100_000_000
+    groups = spark.createDataFrame([(1, m), (-1, 5)], "sg bigint, __m bigint")
+    [row] = dd._candidate_sum(groups).collect()
+    assert row["n_candidates"] == m * (m - 1) // 2 - 10
+    big = spark.createDataFrame([(1, 5_000_000_000)],
+                                "sg bigint, __m bigint")
+    with pytest.raises(Exception, match="OVERFLOW"):
+        dd._candidate_sum(big).collect()
